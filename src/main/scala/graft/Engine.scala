@@ -31,9 +31,8 @@ object Engine {
 
   /** Per-path schema memo (same discipline as SparkEntry.readTable): every
     * schemaless `spark.read.parquet` schedules a footer-inference job, and
-    * the index constructors re-read the same immutable corpus tables. The
-    * memo survives session restarts deliberately — a StructType is not bound
-    * to a session, and the driver contract fixes each path's schema.
+    * the index constructors re-read the same immutable corpus tables. A
+    * StructType is not bound to a session; [[clearCaches]] drops the memo.
     */
   private val schemaCache =
     scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.types.StructType]()
@@ -43,9 +42,12 @@ object Engine {
       .parquet(path)
 
   /** Drop all cached indexes (required between SparkSession restarts —
-    * cached plans are bound to their session).
+    * cached plans are bound to their session) and the schema memos, so a
+    * path rewritten with a different schema is read with its new one.
     */
   def clearCaches(): Unit = {
+    schemaCache.clear()
+    SegmentStore.clearSchemaCache()
     cache.clear()
     segCache.clear()
     segDirCache.clear()

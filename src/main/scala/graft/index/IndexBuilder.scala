@@ -2,29 +2,49 @@ package graft.index
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 
 /** The in-memory (DataFrame-level) form of an index over one corpus:
   * postings + stats + the stored-document table. This is the Catalyst-native
   * query surface; the compressed segment form (delta+VByte+skip, for the
   * 100 TB path) is built from `postings` by [[SegmentWriter]].
+  *
+  * Two relations back it: `withMarkers`, the tokenize output (real postings
+  * plus one [[IndexBuilder.DlMarker]] row per (doc, field)), and
+  * `statsWithMarkers`, ONE (field, term) aggregation over it. Postings, term
+  * stats and field stats are all views of those two.
   */
 final case class TextIndex(
-    postings: Dataset[Posting],
+    withMarkers: Dataset[Posting],
+    statsWithMarkers: Dataset[TermStats],
     docs: DataFrame, // stored fields, includes docIdCol
-    termStats: Dataset[TermStats],
-    fieldStatsFn: () => Map[String, FieldStats],
     docIdCol: String,
     fields: Seq[FieldDef]) {
+
+  /** Real postings: a filter over `withMarkers`, not a copy — on a cached
+    * index the scan keeps the columnar cache's per-batch min/max term
+    * pruning.
+    */
+  val postings: Dataset[Posting] = withMarkers.filter(col("term") =!= IndexBuilder.DlMarker)
+
+  val termStats: Dataset[TermStats] =
+    statsWithMarkers.filter(col("term") =!= IndexBuilder.DlMarker)
 
   /** Per-field corpus stats, computed on FIRST use (round 6): a doc-value
     * query (typed point/range over the stored table) touches neither
     * postings nor stats — eager stats forced a full tokenize+collect of the
     * corpus at build for queries that never score a term.
+    *
+    * They are the marker rows of the stats table: a marker carries tf = dl,
+    * so its df is the field's doc count and its cf the field's Σdl. avgdl is
+    * one division of the exact long sum — the same double Spark's `avg(dl)`
+    * gives, whose double-typed sum of ints below 2^53 is exact too.
     */
-  @transient lazy val fieldStats: Map[String, FieldStats] = fieldStatsFn()
+  @transient lazy val fieldStats: Map[String, FieldStats] =
+    statsWithMarkers.filter(col("term") === IndexBuilder.DlMarker).collect()
+      .map(s => s.field -> FieldStats(s.field, s.df, s.cf.toDouble / s.df, s.cf)).toMap
 
   /** Driver-side memo of term statistics: each distinct query term costs one
     * filtered scan of the (cached) stats table once, then is served from the
@@ -41,20 +61,25 @@ final case class TextIndex(
   def isTextField(field: String): Boolean =
     fields.exists(f => f.indexField == field && f.kind.isInstanceOf[TextField])
 
-  /** Pin the hot tables in memory for repeated queries (search service mode).
-    *
-    * Postings are sorted by (field, term) within partitions BEFORE the
-    * persist (round 6) — the same discipline [[SegmentIndex.cached]] already
-    * applies: the columnar cache keeps per-batch min/max stats, so a term
-    * query decompresses only the few batches whose [min, max] term range
-    * covers it instead of scanning the whole cached index on EVERY query
-    * (the dominant per-query cost of the DataFrame path — each search was a
-    * full 500k-row cache scan per referenced term). One-time sort at cache
-    * fill, amortized over every query served.
+  /** Pin the index in memory for repeated queries (search service mode),
+    * filled in one pass over the documents:
+    *  1. `docs` is persisted FIRST, so the tokenize that fills the postings
+    *     cache reads the cached docs instead of evaluating the docs plan
+    *     (e.g. the [[DocIds.assign]] exchange) a second time;
+    *  2. the postings relation, re-planned over the cached docs, is
+    *     persisted as it comes out of tokenize: already (field, term, docId)
+    *     ordered per flush window, like a flushed Lucene segment, so the
+    *     columnar cache's per-batch min/max stats give every term query
+    *     batch-level pruning with no sort at fill;
+    *  3. the one stats aggregation over it is persisted.
+    * The uncached index's own (lazily persisted) postings are released.
     */
   def cached(): TextIndex = {
-    copy(postings = postings.sortWithinPartitions("field", "term").persist(),
-      docs = docs.persist(), termStats = termStats.persist())
+    withMarkers.unpersist(blocking = false)
+    val idx = IndexBuilder.assemble(docs.persist(), docIdCol, fields)
+    idx.withMarkers.persist()
+    idx.statsWithMarkers.persist()
+    idx
   }
 }
 
@@ -67,12 +92,14 @@ final case class TextIndex(
   *  - tf/positions/dl are computed *inside the tokenize flatMap* — each
   *    (field, term, docId) posting comes from exactly one source row, so
   *    posting construction needs NO shuffle at all; the only wide exchanges
-  *    in the whole build are the small stats aggregations and the
+  *    in the whole build are the one small stats aggregation and the
   *    range-partitioned term shuffle when writing compressed segments.
-  *  - term stats use an explicit salted two-phase aggregation: hot terms
-  *    (role:/tool: values, stop-adjacent words) are first combined per
-  *    (term, salt) so no single reducer receives a hot term's full posting
-  *    stream (north rule: skew handled explicitly).
+  *  - term and field stats are ONE (field, term) aggregation over the
+  *    postings and dl markers. Its partial aggregation collapses each map
+  *    task's rows per key before the shuffle, so a hot term (role:/tool:
+  *    values, stop-adjacent words) reaches its reducer as one row per task,
+  *    never as its full posting stream (north rule: skew handled
+  *    explicitly).
   */
 object IndexBuilder {
 
@@ -100,7 +127,7 @@ object IndexBuilder {
     */
   val DlMarker = ""
 
-  /** One corpus scan emitting real postings AND dl marker rows.
+  /** The tokenize input: docId as a long, then one column per field.
     *
     * Multi-valued sources (ArrayType columns): the reference folds repeated
     * `add()`s of one field into a single multi-valued Lucene field whose
@@ -109,20 +136,22 @@ object IndexBuilder {
     * gap is 0). TEXT fields therefore analyze the values as one
     * space-joined stream (done in the `select` — the hot tokenize loop is
     * untouched); STRING fields index each element as an exact term with
-    * tf = equal-element count and dl = element count.
+    * tf = equal-element count and dl = element count. Returns the indexes
+    * of those array-STRING fields alongside.
     */
-  def tokenizePostingsWithMarkers(docs: DataFrame, docIdCol: String, fields: Seq[FieldDef]): Dataset[Posting] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+  private def tokenizeInput(
+      docs: DataFrame,
+      docIdCol: String,
+      fields: Seq[FieldDef]): (DataFrame, Set[Int]) = {
     val schema = docs.schema
     def isArraySource(f: FieldDef): Boolean =
-      schema.fields.find(_.name == f.source).exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
+      schema.fields.find(_.name == f.source).exists(_.dataType.isInstanceOf[ArrayType])
     val arrayString: Set[Int] = fields.zipWithIndex.collect {
       case (f, i) if f.kind == StringField && isArraySource(f) => i
     }.toSet
     val cols = col(docIdCol).cast(LongType) +: fields.zipWithIndex.map { case (f, i) =>
       if (isArraySource(f)) {
-        val arr = col(f.source).cast(org.apache.spark.sql.types.ArrayType(StringType))
+        val arr = col(f.source).cast(ArrayType(StringType))
         // empty-string elements are dropped like nulls: term "" would collide
         // with the DlMarker sentinel, double-counting the doc in field stats
         // and vanishing from termstats (ADVICE r3) — empty means absent
@@ -130,62 +159,138 @@ object IndexBuilder {
         else array_join(arr, " ") // null elements skipped, like null scalars
       } else col(f.source).cast(StringType)
     }
-    val emptyPos = Array.empty[Int]
-    docs.select(cols: _*).mapPartitions { rows =>
-      // one reusable (term, pos) buffer per partition: no Token objects, no
-      // ArrayBuffer growth, no TimSort scratch in the build's hottest loop
-      // (per-doc allocation was the 4-core scaling limiter — see
-      // analysis.TokenBuffer)
-      val buf = new graft.analysis.TokenBuffer(256)
-      rows.flatMap { row =>
-        val docId = row.getLong(0)
-        fields.iterator.zipWithIndex.flatMap { case (f, i) =>
-          if (row.isNullAt(i + 1)) Iterator.empty
-          else if (arrayString(i)) {
+    (docs.select(cols: _*), arrayString)
+  }
+
+  /** The ONE per-document tokenize loop, one instance per task: each
+    * document's fields are analyzed and their term runs appended straight
+    * into per-(field, term) [[SegmentStore.RunBuf]]s — no per-posting
+    * object, no per-document output buffer. With `markers`, each non-empty
+    * (doc, field) also appends a [[DlMarker]] run entry (tf = dl, no
+    * positions). `nBuffered` counts buffered entries for the caller's
+    * [[SegmentStore.FlushPostings]] bound; `clear()` starts a new window.
+    */
+  private final class RunTokenizer(fields: Seq[FieldDef], arrayString: Set[Int], markers: Boolean) {
+    private val analyzers: Array[graft.analysis.Analyzer] = fields.map {
+      case FieldDef(_, _, TextField(a), _) => a
+      case _ => null // STRING field
+    }.toArray
+    // one reusable (term, pos) buffer: no Token objects, no ArrayBuffer
+    // growth, no TimSort scratch in the build's hottest loop (per-doc
+    // allocation was the 4-core scaling limiter — see analysis.TokenBuffer)
+    private val buf = new graft.analysis.TokenBuffer(256)
+    val bufs: Array[java.util.HashMap[String, SegmentStore.RunBuf]] =
+      Array.fill(analyzers.length)(new java.util.HashMap[String, SegmentStore.RunBuf]())
+    var nBuffered = 0
+
+    private def add(i: Int, term: String, docId: Long, tf: Int, dl: Int, p: Array[Int]): Unit = {
+      val m = bufs(i)
+      var b = m.get(term)
+      if (b == null) { b = new SegmentStore.RunBuf(); m.put(term, b) }
+      b.add(docId, tf, dl, p)
+      nBuffered += 1
+    }
+
+    private def mark(i: Int, docId: Long, dl: Int): Unit =
+      if (markers) add(i, DlMarker, docId, dl, dl, Array.emptyIntArray)
+
+    def addDoc(row: Row): Unit = {
+      val docId = row.getLong(0)
+      var i = 0
+      while (i < analyzers.length) {
+        if (!row.isNullAt(i + 1)) {
+          if (arrayString(i)) {
             val elems = row.getSeq[String](i + 1)
             val m = elems.length
-            if (m == 0) Iterator.empty
-            else {
+            if (m > 0) {
               val byTerm = elems.zipWithIndex.groupBy(_._1).toSeq.sortBy(_._1)
-              byTerm.iterator.map { case (term, occ) =>
-                Posting(f.indexField, term, docId, occ.length, occ.map(_._2).toArray, m)
-              } ++ Iterator(Posting(f.indexField, DlMarker, docId, m, emptyPos, m))
+              byTerm.foreach { case (term, occ) =>
+                add(i, term, docId, occ.length, m, occ.map(_._2).toArray)
+              }
+              mark(i, docId, m)
             }
-          }
-          else f.kind match {
-            case TextField(analyzer) =>
+          } else analyzers(i) match {
+            case null => // STRING scalar
+              val v = row.getString(i + 1)
+              // empty string ≡ absent (it IS the DlMarker sentinel — see the
+              // array note in tokenizeInput); a doc with an empty STRING
+              // value simply has no term in this field
+              if (!v.isEmpty) {
+                add(i, v, docId, 1, 1, Array(0))
+                mark(i, docId, 1)
+              }
+            case analyzer =>
               buf.clear()
               analyzer.tokensInto(row.getString(i + 1), buf)
               val dl = buf.len
-              if (dl == 0) Iterator.empty
-              else {
+              if (dl > 0) {
                 // sort-based run grouping (no per-doc HashMap churn)
                 buf.sort()
                 val terms = buf.terms
                 val poss = buf.poss
-                val out = new ArrayBuffer[Posting](16)
                 var s = 0
                 while (s < dl) {
                   var e = s + 1
                   while (e < dl && terms(e) == terms(s)) e += 1
-                  val positions = java.util.Arrays.copyOfRange(poss, s, e)
-                  out += Posting(f.indexField, terms(s), docId, e - s, positions, dl)
+                  add(i, terms(s), docId, e - s, dl, java.util.Arrays.copyOfRange(poss, s, e))
                   s = e
                 }
-                out += Posting(f.indexField, DlMarker, docId, dl, emptyPos, dl)
-                out.iterator
+                mark(i, docId, dl)
               }
-            case StringField =>
-              val v = row.getString(i + 1)
-              // empty string ≡ absent (it IS the DlMarker sentinel — see the
-              // array branch note); a doc with an empty STRING value simply
-              // has no term in this field
-              if (v.isEmpty) Iterator.empty
-              else Iterator(
-                Posting(f.indexField, v, docId, 1, Array(0), 1),
-                Posting(f.indexField, DlMarker, docId, 1, emptyPos, 1))
           }
         }
+        i += 1
+      }
+    }
+
+    def clear(): Unit = {
+      bufs.foreach(_.clear())
+      nBuffered = 0
+    }
+  }
+
+  /** One corpus scan emitting real postings AND dl marker rows, in
+    * (field, term, docId) order per flush window — the order a Lucene
+    * segment is flushed in, and the one a cached relation needs for
+    * batch-level term pruning, so no sort pass ever runs over it.
+    *
+    * Each task feeds its documents through the shared [[RunTokenizer]]
+    * until [[SegmentStore.FlushPostings]] entries are buffered (a document
+    * is never split across windows), then emits the window field by field
+    * (by name), term by term, each run docId-ascending.
+    */
+  def tokenizePostingsWithMarkers(docs: DataFrame, docIdCol: String, fields: Seq[FieldDef]): Dataset[Posting] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val (input, arrayString) = tokenizeInput(docs, docIdCol, fields)
+    val fieldNames = fields.map(_.indexField).toArray
+    val fieldOrder = fields.indices.sortBy(fieldNames(_)).toArray
+    input.mapPartitions { rows =>
+      val tok = new RunTokenizer(fields, arrayString, markers = true)
+      def window(): Iterator[Posting] = {
+        while (rows.hasNext && tok.nBuffered < SegmentStore.FlushPostings) tok.addDoc(rows.next())
+        // snapshot the window's runs, term-sorted per field, before the
+        // buffers are reused for the next one
+        val runs = fieldOrder.map { i =>
+          val m = tok.bufs(i)
+          val terms = m.keySet.toArray(new Array[String](m.size)).sorted
+          (fieldNames(i), terms, terms.map(m.get))
+        }
+        tok.clear()
+        runs.iterator.flatMap { case (field, terms, runBufs) =>
+          terms.iterator.zip(runBufs.iterator).flatMap { case (term, b) =>
+            val (d, t, l, ps) = b.result()
+            Iterator.tabulate(d.length)(j => Posting(field, term, d(j), t(j), ps(j), l(j)))
+          }
+        }
+      }
+      new Iterator[Posting] {
+        private var out: Iterator[Posting] = Iterator.empty
+        def hasNext: Boolean = {
+          while (!out.hasNext && rows.hasNext) out = window()
+          out.hasNext
+        }
+        def next(): Posting = out.next()
       }
     }
   }
@@ -195,21 +300,20 @@ object IndexBuilder {
     tokenizePostingsWithMarkers(docs, docIdCol, fields).filter(_.term != DlMarker)
   }
 
-  /** FUSED tokenize → map-side posting combine (round 6): one loop per
-    * partition that tokenizes each document and appends its term runs
-    * straight into per-term [[SegmentStore.RunBuf]]s, emitting
-    * [[SegmentStore.MiniRun]] rows per shard — the input to
-    * [[SegmentStore.encodeRuns]].
+  /** FUSED tokenize → map-side posting combine (round 6): the shared
+    * [[RunTokenizer]] loop per partition, without marker entries, emitting
+    * each window's term runs as [[SegmentStore.MiniRun]] rows per shard —
+    * the input to [[SegmentStore.encodeRuns]].
     *
     * Semantically identical to `tokenizePostings |> encodeSegments`'s
     * internal combine (same runs, same docId order — property-pinned by
-    * SegmentSpec's fused-≡-streamed case), but the per-posting `Posting`
-    * object, the `(shard, field, term)` tuple key allocated per map lookup,
-    * and the per-document output buffer are all gone: at bench scale that
-    * was ~36M short-lived objects per build riding the allocation/memory
-    * bandwidth the wide (4-core) scaling child is bounded by. Emits NO
-    * dl-marker rows — callers use `reconstructMarkers` (both current
-    * callers are the `docsPerShard <= Int.MaxValue` paths).
+    * SegmentSpec's fused-≡-streamed case), but the `(shard, field, term)`
+    * tuple key allocated per map lookup and the per-posting object stream
+    * into the combine are gone: at bench scale that was ~36M short-lived
+    * objects per build riding the allocation/memory bandwidth the wide
+    * (4-core) scaling child is bounded by. Emits NO dl-marker rows —
+    * callers use `reconstructMarkers` (both current callers are the
+    * `docsPerShard <= Int.MaxValue` paths).
     *
     * Flush granularity: a mini-run window closes at a shard boundary (docs
     * arrive docId-ascending from [[DocIds.assign]], so shards are monotonic
@@ -225,110 +329,36 @@ object IndexBuilder {
       docsPerShard: Long): Dataset[SegmentStore.MiniRun] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val schema = docs.schema
-    def isArraySource(f: FieldDef): Boolean =
-      schema.fields.find(_.name == f.source).exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
-    val arrayString: Set[Int] = fields.zipWithIndex.collect {
-      case (f, i) if f.kind == StringField && isArraySource(f) => i
-    }.toSet
-    val cols = col(docIdCol).cast(LongType) +: fields.zipWithIndex.map { case (f, i) =>
-      if (isArraySource(f)) {
-        val arr = col(f.source).cast(org.apache.spark.sql.types.ArrayType(StringType))
-        if (arrayString(i)) filter(arr, x => x.isNotNull && x =!= lit(""))
-        else array_join(arr, " ")
-      } else col(f.source).cast(StringType)
-    }
-    val nFields = fields.length
+    val (input, arrayString) = tokenizeInput(docs, docIdCol, fields)
     val fieldNames = fields.map(_.indexField).toArray
-    val analyzers: Array[graft.analysis.Analyzer] = fields.map {
-      case FieldDef(_, _, TextField(a), _) => a
-      case _ => null
-    }.toArray
-    docs.select(cols: _*).mapPartitions { rows =>
+    input.mapPartitions { rows =>
       val src = rows.buffered
+      val tok = new RunTokenizer(fields, arrayString, markers = false)
       new Iterator[SegmentStore.MiniRun] {
-        private val buf = new graft.analysis.TokenBuffer(256)
-        private val bufs: Array[java.util.HashMap[String, SegmentStore.RunBuf]] =
-          Array.fill(nFields)(new java.util.HashMap[String, SegmentStore.RunBuf]())
         private var curShard = -1
-        private var nBuffered = 0
         private var out: Iterator[SegmentStore.MiniRun] = Iterator.empty
 
-        private def bufOf(i: Int, term: String): SegmentStore.RunBuf = {
-          val m = bufs(i)
-          var b = m.get(term)
-          if (b == null) { b = new SegmentStore.RunBuf(); m.put(term, b) }
-          b
-        }
-
-        private def addDoc(row: org.apache.spark.sql.Row): Unit = {
-          val docId = row.getLong(0)
-          var i = 0
-          while (i < nFields) {
-            if (!row.isNullAt(i + 1)) {
-              if (arrayString(i)) {
-                val elems = row.getSeq[String](i + 1)
-                val m = elems.length
-                if (m > 0) {
-                  val byTerm = elems.zipWithIndex.groupBy(_._1).toSeq.sortBy(_._1)
-                  byTerm.foreach { case (term, occ) =>
-                    bufOf(i, term).add(docId, occ.length, m, occ.map(_._2).toArray)
-                    nBuffered += 1
-                  }
-                }
-              } else analyzers(i) match {
-                case null => // StringField scalar
-                  val v = row.getString(i + 1)
-                  if (!v.isEmpty) {
-                    bufOf(i, v).add(docId, 1, 1, Array(0))
-                    nBuffered += 1
-                  }
-                case analyzer =>
-                  buf.clear()
-                  analyzer.tokensInto(row.getString(i + 1), buf)
-                  val dl = buf.len
-                  if (dl > 0) {
-                    buf.sort()
-                    val terms = buf.terms
-                    val poss = buf.poss
-                    var s = 0
-                    while (s < dl) {
-                      var e = s + 1
-                      while (e < dl && terms(e) == terms(s)) e += 1
-                      bufOf(i, terms(s)).add(docId, e - s, dl,
-                        java.util.Arrays.copyOfRange(poss, s, e))
-                      nBuffered += 1
-                      s = e
-                    }
-                  }
-              }
-            }
-            i += 1
-          }
-        }
-
         private def drain(): Iterator[SegmentStore.MiniRun] = {
-          val acc = new ArrayBuffer[SegmentStore.MiniRun](bufs.iterator.map(_.size).sum)
+          val acc = new ArrayBuffer[SegmentStore.MiniRun](tok.bufs.iterator.map(_.size).sum)
           var i = 0
-          while (i < nFields) {
-            val it = bufs(i).entrySet().iterator()
+          while (i < fieldNames.length) {
+            val it = tok.bufs(i).entrySet().iterator()
             while (it.hasNext) {
               val e = it.next()
               val (d, t, l, ps) = e.getValue.result()
               acc += ((curShard, fieldNames(i), e.getKey, d(0), d, t, l, ps))
             }
-            bufs(i).clear()
             i += 1
           }
-          nBuffered = 0
+          tok.clear()
           acc.iterator
         }
 
         private def refill(): Unit = {
           curShard = (src.head.getLong(0) / docsPerShard).toInt
-          while (src.hasNext && nBuffered < SegmentStore.FlushPostings &&
+          while (src.hasNext && tok.nBuffered < SegmentStore.FlushPostings &&
             (src.head.getLong(0) / docsPerShard).toInt == curShard) {
-            addDoc(src.next())
+            tok.addDoc(src.next())
           }
           out = drain()
         }
@@ -342,46 +372,29 @@ object IndexBuilder {
     }
   }
 
-  /** Field stats from the dl marker rows: partial agg collapses each
-    * partition to #fields rows before the (trivial) shuffle.
+  /** The index over `docs` with nothing persisted: the tokenize output and
+    * ONE (field, term) aggregation over it, marker rows included (df =
+    * count, cf = Σtf — see [[TextIndex.fieldStats]] for the marker rows).
     */
-  def fieldStatsFromMarkers(withMarkers: Dataset[Posting]): DataFrame = {
-    val spark = withMarkers.sparkSession
-    import spark.implicits._
-    withMarkers.filter(_.term == DlMarker).toDF()
-      .groupBy($"field")
-      .agg(count(lit(1)).as("docCount"), avg($"dl").as("avgdl"),
-        sum($"dl").cast("long").as("sumDl"))
-  }
-
-  /** Salted two-phase term statistics: partial (term, salt) combine, then
-    * final merge — no reducer ever sees a hot term's full stream.
-    */
-  def termStats(postings: Dataset[Posting], saltBuckets: Int = 16): Dataset[TermStats] = {
-    val spark = postings.sparkSession
-    import spark.implicits._
-    postings
-      .groupBy($"field", $"term", pmod(hash($"docId"), lit(saltBuckets)).as("salt"))
-      .agg(count(lit(1)).as("pdf"), sum($"tf").as("pcf"))
-      .groupBy($"field", $"term")
-      .agg(sum($"pdf").as("df"), sum($"pcf").as("cf"))
+  private[index] def assemble(docs: DataFrame, docIdCol: String, fields: Seq[FieldDef]): TextIndex = {
+    import docs.sparkSession.implicits._
+    val withMarkers = tokenizePostingsWithMarkers(docs, docIdCol, fields)
+    val stats = withMarkers.groupBy($"field", $"term")
+      .agg(count(lit(1)).as("df"), sum($"tf").as("cf"))
       .as[TermStats]
+    TextIndex(withMarkers, stats, docs, docIdCol, fields)
   }
 
   /** Build the full index over `docs`. `docs` must already carry a stable
     * Long doc id (use [[DocIds.assign]] when the source has none).
     *
-    * One corpus scan: postings are tokenized once and persisted; term stats
-    * and field stats both aggregate the cached postings.
+    * One corpus scan: postings are tokenized once and persisted; the one
+    * stats aggregation reads the cached postings. [[TextIndex.cached]] also
+    * pins the docs and the stats.
     */
   def build(docs: DataFrame, docIdCol: String, fields: Seq[FieldDef]): TextIndex = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val withMarkers = tokenizePostingsWithMarkers(docs, docIdCol, fields).persist()
-    val postings = withMarkers.filter(_.term != DlMarker)
-    TextIndex(postings, docs, termStats(postings),
-      () => fieldStatsFromMarkers(withMarkers).as[FieldStats]
-        .collect().map(f => f.field -> f).toMap,
-      docIdCol, fields)
+    val idx = assemble(docs, docIdCol, fields)
+    idx.withMarkers.persist()
+    idx
   }
 }

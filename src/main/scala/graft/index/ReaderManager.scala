@@ -68,16 +68,21 @@ final class IndexReaderManager(
   /** Re-open iff the on-disk index advanced; returns true when a new
     * snapshot was installed. Readers holding the old snapshot keep
     * working until their queries finish (unpersist is non-blocking).
+    *
+    * The old snapshot is unpersisted BEFORE the new one is cached: both
+    * read the same paths, so the new persist would otherwise dedup into the
+    * old entry, which the unpersist then drops — leaving the new snapshot
+    * uncached over generation files a later optimize deletes.
     */
   def maybeRefresh(): Boolean = synchronized {
     val v = ReaderManager.version(dir)
     if (v == snapshot._1) false
     else {
       val old = snapshot._2
-      snapshot = (v, SegmentStore.openMerged(spark, dir).cached(servingPartitions))
       old.segments.unpersist(blocking = false)
       old.termStats.unpersist(blocking = false)
       old.stored.foreach(_.unpersist(blocking = false))
+      snapshot = (v, SegmentStore.openMerged(spark, dir).cached(servingPartitions))
       true
     }
   }

@@ -1143,9 +1143,13 @@ object SegmentStore {
     * Sound because a store dir's stored/keys schema is fixed by its spec for
     * the dir's whole lifetime — generations append, optimize rewrites the
     * same columns (temp-dir paths are never recycled across different specs).
+    * A path rewritten out of band needs [[clearSchemaCache]].
     */
   private val inferredSchemaCache =
     scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.types.StructType]()
+
+  /** Forget every memoized schema (see [[graft.Engine.clearCaches]]). */
+  private[graft] def clearSchemaCache(): Unit = inferredSchemaCache.clear()
 
   private def readInferred(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(

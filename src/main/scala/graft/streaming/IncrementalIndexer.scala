@@ -166,8 +166,11 @@ object IncrementalIndexer {
               .withColumn("shard", (col("docId") / lit(dps)).cast("int"))
               .write.mode(SaveMode.Overwrite).parquet(s"$staging/stored")
           }))
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(writes), scala.concurrent.duration.Duration.Inf)
+        // join EVERY write before rethrowing the first failure: no staged
+        // write may still be running into the staging dir when the caller
+        // replays the batch
+        writes.foreach(scala.concurrent.Await.ready(_, scala.concurrent.duration.Duration.Inf))
+        writes.foreach(_.value.get.get)
       } finally pool.shutdown()
       // promote: idempotent move under stable names, then delete staging
       val subs = Seq("termstats", "segments", "keys") ++

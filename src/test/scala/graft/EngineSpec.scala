@@ -35,6 +35,32 @@ class EngineSpec extends SparkSpec {
     }
   }
 
+  test("clearCaches drops the schema memos: a rewritten path is read with its new column") {
+    import spark.implicits._
+    val sf = java.nio.file.Files.createTempDirectory("graft-sf").toString
+    val dir = java.nio.file.Files.createTempDirectory("graft-stored").toString
+    val docs = Seq((0L, "alpha beta", "en", "web", 10L), (1L, "beta gamma", "de", "web", 10L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    docs.write.parquet(s"$sf/documents.parquet")
+    SegmentStore.build(docs, "doc_id", Engine.DocFields, dir, docsPerShard = 16,
+      storedColumns = Seq("text"))
+    assert(!Engine.documentsIndex(spark, sf).docs.columns.contains("extra"))
+    assert(!SegmentStore.open(spark, dir).stored.get.columns.contains("extra"))
+    // rewrite both paths with one more column (from driver-local rows, so
+    // the write never reads the path it overwrites)
+    def rewrite(path: String): Unit = {
+      val df = spark.read.parquet(path).withColumn("extra", lit(1))
+      spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+        .write.mode("overwrite").parquet(path)
+    }
+    rewrite(s"$sf/documents.parquet")
+    rewrite(s"$dir/stored")
+    Engine.clearCaches()
+    assert(Engine.documentsIndex(spark, sf).docs.columns.contains("extra"))
+    assert(SegmentStore.open(spark, dir).stored.get.columns.contains("extra"))
+    Engine.clearCaches()
+  }
+
   test("flagship entry returns rows on sf0.001 (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

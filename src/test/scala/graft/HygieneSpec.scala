@@ -20,20 +20,18 @@ class HygieneSpec extends SparkSpec {
     val fields = Seq(
       FieldDef("tag", "tag", StringField),
       FieldDef("word", "words", StringField))
-    val withMarkers = IndexBuilder.tokenizePostingsWithMarkers(docs, "doc_id", fields)
+    val idx = IndexBuilder.build(docs, "doc_id", fields)
     // no real posting ever carries the marker term with positions, and no
     // empty-string term exists anywhere
-    val postings = withMarkers.filter(_.term != IndexBuilder.DlMarker).collect()
+    val postings = idx.postings.collect()
     assert(postings.forall(_.term.nonEmpty))
     // doc 1's tag is empty -> absent: tag field stats must count 2 docs
-    val fs = IndexBuilder.fieldStatsFromMarkers(withMarkers).as[FieldStats]
-      .collect().map(f => f.field -> f).toMap
+    val fs = idx.fieldStats
     assert(fs("tag").docCount === 2)
     // doc 1's doubled space would have produced an empty element; dl counts
     // only the two real words
     assert(fs("word").docCount === 3)
-    val stats = IndexBuilder.termStats(withMarkers.filter(_.term != IndexBuilder.DlMarker))
-      .collect().map(s => (s.field, s.term) -> s.df).toMap
+    val stats = idx.termStats.collect().map(s => (s.field, s.term) -> s.df).toMap
     assert(stats.get(("word", "")) === None)
     assert(stats(("word", "x")) === 2L)
   }

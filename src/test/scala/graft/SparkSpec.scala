@@ -7,6 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 
+  /** The cache-manager entry a Dataset's plan resolves to, if any. */
+  def cachedData(ds: org.apache.spark.sql.Dataset[_]): Option[org.apache.spark.sql.execution.CachedData] =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+      .lookupCachedData(ds.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+
   /** (doc_id, text) fixture frame — shared by the ops/pipeline specs. */
   def docsFixture(rows: (Long, String)*): org.apache.spark.sql.DataFrame = {
     import spark.implicits._

@@ -271,6 +271,57 @@ class StreamingSpec extends SparkSpec {
     assert(mgr.maybeRefresh())
   }
 
+  test("IndexReaderManager.maybeRefresh leaves the new snapshot cached, so it outlives optimizeInPlace") {
+    val dir = Files.createTempDirectory("graft-nrt-cache").toString
+    val keys = Seq("conv_id", "turn_idx")
+    IncrementalIndexer.upsertBatch(turnsDF(0, 30), 0L, dir, keys, fields, 257)
+    val mgr = new IndexReaderManager(spark, dir, servingPartitions = 4)
+    assert(topK(mgr.acquire(), "hello").nonEmpty) // the first snapshot is materialized
+    // re-sent keys: a new generation plus tombstones
+    IncrementalIndexer.upsertBatch(turnsDF(20, 40), 1L, dir, keys, fields, 257)
+    assert(mgr.maybeRefresh())
+    val snap = mgr.acquire()
+    assert(cachedData(snap.segments).isDefined, "refreshed segments are not cached")
+    assert(cachedData(snap.termStats).isDefined, "refreshed termStats are not cached")
+    val before = topK(snap, "hello")
+    assert(before.nonEmpty)
+    // optimize deletes the generation files the snapshot was opened over;
+    // a cached snapshot keeps answering from memory
+    SegmentStore.optimizeInPlace(spark, dir)
+    assert(topK(snap, "hello") === before)
+  }
+
+  test("upsertBatch joins every staged write before it rethrows a failed one") {
+    val dir = Files.createTempDirectory("graft-inc-fail").toString
+    val started = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val ended = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.put(e.jobId, e.time)
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ended.put(e.jobId, e.time)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // the stored-sidecar write fails at once (unknown column) while the
+      // termstats and key-map writes run as Spark jobs
+      intercept[org.apache.spark.sql.AnalysisException] {
+        IncrementalIndexer.upsertBatch(turnsDF(0, 30), 0L, dir, Seq("conv_id", "turn_idx"),
+          fields, 257, storedColumns = Seq("no_such_column"))
+      }
+      val thrownAt = System.currentTimeMillis()
+      // the listener bus is asynchronous: wait until it has seen every job end
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!started.keySet.stream.allMatch(ended.containsKey(_)) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      import scala.jdk.CollectionConverters._
+      val late = started.asScala.keys.filter(j => ended.asScala.get(j).forall(_ > thrownAt))
+      assert(started.size > 0)
+      assert(late.isEmpty, s"jobs still running when upsertBatch threw: $late")
+      assert(IncrementalIndexer.readMeta(dir).lastBatch === -1L) // nothing committed
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("incremental generations carry the stored sidecar: doc-value + envelope queries on a streamed index (round 4)") {
     val dir = Files.createTempDirectory("graft-inc-stored").toString
     val stored = Seq("text", "role", "turn_idx")
