@@ -300,20 +300,17 @@ object IndexBuilder {
     tokenizePostingsWithMarkers(docs, docIdCol, fields).filter(_.term != DlMarker)
   }
 
-  /** FUSED tokenize → map-side posting combine (round 6): the shared
-    * [[RunTokenizer]] loop per partition, without marker entries, emitting
-    * each window's term runs as [[SegmentStore.MiniRun]] rows per shard —
-    * the input to [[SegmentStore.encodeRuns]].
+  /** FUSED tokenize → map-side posting combine: the shared [[RunTokenizer]]
+    * loop per partition, without marker entries, emitting each window's
+    * term runs as [[SegmentStore.MiniRun]] rows per shard — the input to
+    * [[SegmentStore.encodeRuns]].
     *
-    * Semantically identical to `tokenizePostings |> encodeSegments`'s
-    * internal combine (same runs, same docId order — property-pinned by
-    * SegmentSpec's fused-≡-streamed case), but the `(shard, field, term)`
-    * tuple key allocated per map lookup and the per-posting object stream
-    * into the combine are gone: at bench scale that was ~36M short-lived
-    * objects per build riding the allocation/memory bandwidth the wide
-    * (4-core) scaling child is bounded by. Emits NO dl-marker rows —
-    * callers use `reconstructMarkers` (both current callers are the
-    * `docsPerShard <= Int.MaxValue` paths).
+    * Encodes to the same segment rows as one docId-ordered run per
+    * (shard, field, term) of the posting stream (property-pinned by
+    * SegmentSpec's fused-≡-streamed case), with no `(shard, field, term)`
+    * tuple key per map lookup and no per-posting object stream. Emits NO
+    * dl-marker rows: the encode tasks derive markers and norms from the
+    * postings.
     *
     * Flush granularity: a mini-run window closes at a shard boundary (docs
     * arrive docId-ascending from [[DocIds.assign]], so shards are monotonic

@@ -15,12 +15,13 @@ object Scorers {
 
   /** Cursor over one term's blocks within a shard. Blocks are decoded
     * lazily — advancing past a block via its skip entry never decodes it —
-    * and in two tiers: docIds/tf/dl decode when the cursor enters a block,
+    * and in two tiers: docIds/tf decode when the cursor enters a block,
     * POSITIONS only on the first [[curPositions]] call for that block.
     * Term/boolean queries therefore never decode positions at all, and a
     * phrase query skips them for every block its feasibility check prunes.
+    * The current doc's field length comes from the shard's `norms`.
     */
-  final class TermIterator(blocks: IndexedSeq[Block]) {
+  final class TermIterator(blocks: IndexedSeq[Block], norms: Codec.Norms) {
     private var bi = 0
     private var decoded: Codec.BlockDocs = _
     private var positions: Array[Array[Int]] = _
@@ -49,7 +50,7 @@ object Scorers {
 
     def doc: Long = if (decoded == null) NoMoreDocs else decoded.docIds(di)
     def curTf: Int = decoded.tfs(di)
-    def curDl: Int = decoded.dls(di)
+    def curDl: Int = norms.dl(decoded.docIds(di))
     def curPositions: Array[Int] = {
       if (positions == null) {
         positions = Codec.decodePositions(blocks(bi), decoded.tfs)

@@ -177,19 +177,18 @@ final class SegmentSearcher(
     import spark.implicits._
     if (sq == SEmpty) return spark.emptyDataset[(Long, Double)].toDF("docId", "score")
     val leaves = SegmentSearcher.leafTerms(sq)
-    val cond =
-      if (leaves.isEmpty) lit(false) // doc-value-only query: all matches ride the aux channel
-      else leaves.map { case (f, t) => (col("field") === f) && (col("term") === t) }.reduce(_ || _)
-    def byTermOf(rows: Iterator[SegmentRow]): Map[(String, String), IndexedSeq[Codec.Block]] =
-      rows.toSeq.groupBy(r => (r.field, r.term)).map { case (key, rs) =>
-        key -> rs.sortBy(_.minDoc).flatMap(_.blocks).toIndexedSeq
-      }
-    def run(shard: Int, byTerm: Map[(String, String), IndexedSeq[Codec.Block]],
+    // each queried field's dl-marker rows carry its norms: one per shard
+    // and generation, read with the term rows
+    val fieldsRead = leaves.map(_._1).distinct
+    val cond = (leaves.map { case (f, t) => (col("field") === f) && (col("term") === t) } ++
+      fieldsRead.map(f => (col("field") === f) && (col("term") === IndexBuilder.DlMarker)))
+      .reduceOption(_ || _).getOrElse(lit(false)) // doc-value-only query: all matches ride the aux channel
+    def run(shard: Int, postings: ShardPostings,
         docSets: Map[Int, Array[Long]], del: Long => Boolean): Iterator[(Long, Double)] =
       countAcc match {
         case None if exhaustive =>
-          SegmentSearcher.allScored(sq, byTerm, del, docSets).iterator
-        case None => SegmentSearcher.shardTopK(sq, byTerm, k, del, docSets).iterator
+          SegmentSearcher.allScored(sq, postings, del, docSets).iterator
+        case None => SegmentSearcher.shardTopK(sq, postings, k, del, docSets).iterator
         case Some(acc) =>
           // totals pass: exhaustive scoring (pruning would skip uncounted
           // matches) with a per-shard (shard, count) accumulator entry —
@@ -200,7 +199,7 @@ final class SegmentSearcher(
           // under speculative/re-executed tasks (ADVICE r3); the per-shard
           // count is deterministic, so first-wins dedup is exact.
           var cnt = 0L
-          val res = SegmentSearcher.exhaustiveCounted(sq, byTerm, k, del, cnt += _, docSets)
+          val res = SegmentSearcher.exhaustiveCounted(sq, postings, k, del, cnt += _, docSets)
           acc.add((shard, cnt))
           res.iterator
       }
@@ -239,11 +238,11 @@ final class SegmentSearcher(
         // the query is ONE narrow stage — no per-query shuffle
         si.segments.filter(cond).mapPartitions { it =>
           it.toSeq.groupBy(_.shard).iterator.flatMap { case (sh, rows) =>
-            run(sh, byTermOf(rows.iterator), Map.empty, _ => false)
+            run(sh, ShardPostings(rows.iterator), Map.empty, _ => false)
           }
         }
       case None =>
-        grouped.flatMapGroups { (sh, rows) => run(sh, byTermOf(rows), Map.empty, _ => false) }
+        grouped.flatMapGroups { (sh, rows) => run(sh, ShardPostings(rows), Map.empty, _ => false) }
       case Some(auxDs) =>
         grouped.cogroup(auxDs.groupByKey(_._1)) { (sh, rows, auxIt) =>
           val del = scala.collection.mutable.HashSet.empty[Long]
@@ -259,7 +258,7 @@ final class SegmentSearcher(
             java.util.Arrays.sort(arr) // scorer cursors need docId order
             id -> arr
           }.toMap
-          run(sh, byTermOf(rows), docSets, del.contains)
+          run(sh, ShardPostings(rows), docSets, del.contains)
         }
     }
     perShard.toDF("docId", "score")
@@ -391,6 +390,33 @@ final class SegmentSearcher(
   }
 }
 
+/** One shard's slice of the index that a query reads: each leaf term's
+  * blocks in docId order, and each queried field's norms from its marker
+  * rows (one per generation).
+  */
+final class ShardPostings private (
+    byTerm: Map[(String, String), IndexedSeq[Block]],
+    norms: Map[String, Codec.Norms]) {
+  def iterator(field: String, term: String): TermIterator =
+    new TermIterator(byTerm.getOrElse((field, term), Vector.empty),
+      norms.getOrElse(field, ShardPostings.NoNorms))
+}
+
+object ShardPostings {
+  private val NoNorms = new Codec.Norms(Nil)
+
+  def apply(rows: Iterator[SegmentRow]): ShardPostings = {
+    val (markers, terms) = rows.toSeq.partition(_.term == IndexBuilder.DlMarker)
+    new ShardPostings(
+      terms.groupBy(r => (r.field, r.term)).map { case (key, rs) =>
+        key -> rs.sortBy(_.minDoc).flatMap(_.blocks).toIndexedSeq
+      },
+      markers.groupBy(_.field).map { case (f, ms) =>
+        f -> new Codec.Norms(ms.map(m => (m.minDoc, m.maxDoc, m.norms)))
+      })
+  }
+}
+
 object SegmentSearcher {
 
   /** Plan-memo bound: thousands of distinct live prepared statements is
@@ -409,26 +435,25 @@ object SegmentSearcher {
     case SEmpty => Nil
   }
 
-  private def emptyIter: TermIterator = new TermIterator(Vector.empty[Block])
 
   def buildScorer(
       sq: SQ,
-      byTerm: Map[(String, String), IndexedSeq[Block]],
+      postings: ShardPostings,
       docSets: Map[Int, Array[Long]] = Map.empty): DocScorer = sq match {
     case STerm(f, t, w, avgdl) =>
-      new TermScorer(new TermIterator(byTerm.getOrElse((f, t), Vector.empty)), w).withAvgdl(avgdl)
+      new TermScorer(postings.iterator(f, t), w).withAvgdl(avgdl)
     case SPhrase(f, ts, slop, w, avgdl) =>
-      new PhraseScorer(ts.map(t => new TermIterator(byTerm.getOrElse((f, t), Vector.empty))).toIndexedSeq, slop, w, avgdl)
+      new PhraseScorer(ts.map(postings.iterator(f, _)).toIndexedSeq, slop, w, avgdl)
     case SConst(f, ts) =>
-      new ConstScorer(ts.map(t => new TermIterator(byTerm.getOrElse((f, t), Vector.empty))).toIndexedSeq)
+      new ConstScorer(ts.map(postings.iterator(f, _)).toIndexedSeq)
     case SDocSet(predId) => new DocIdSetScorer(docSets.getOrElse(predId, Array.emptyLongArray))
-    case SBoost(inner, b) => new BoostScorer(buildScorer(inner, byTerm, docSets), b)
+    case SBoost(inner, b) => new BoostScorer(buildScorer(inner, postings, docSets), b)
     case SBool(m, s, n) =>
       new BoolScorer(
-        m.map(buildScorer(_, byTerm, docSets)).toIndexedSeq,
-        s.map(buildScorer(_, byTerm, docSets)).toIndexedSeq,
-        n.map(buildScorer(_, byTerm, docSets)).toIndexedSeq)
-    case SEmpty => new ConstScorer(IndexedSeq(emptyIter))
+        m.map(buildScorer(_, postings, docSets)).toIndexedSeq,
+        s.map(buildScorer(_, postings, docSets)).toIndexedSeq,
+        n.map(buildScorer(_, postings, docSets)).toIndexedSeq)
+    case SEmpty => new ConstScorer(IndexedSeq.empty)
   }
 
   /** Per-shard top-k: block-max WAND for a pure term disjunction, exhaustive
@@ -439,33 +464,33 @@ object SegmentSearcher {
     */
   def shardTopK(
       sq: SQ,
-      byTerm: Map[(String, String), IndexedSeq[Block]],
+      postings: ShardPostings,
       k: Int,
       excluded: Long => Boolean = _ => false,
       docSets: Map[Int, Array[Long]] = Map.empty): Seq[(Long, Double)] =
     sq match {
       case STerm(f, t, w, avgdl) =>
         wandTopK(IndexedSeq(
-          new TermScorer(new TermIterator(byTerm.getOrElse((f, t), Vector.empty)), w).withAvgdl(avgdl)), k, excluded)
+          new TermScorer(postings.iterator(f, t), w).withAvgdl(avgdl)), k, excluded)
       case SBool(m, shoulds, n) if m.isEmpty && n.isEmpty && shoulds.forall(_.isInstanceOf[STerm]) =>
         wandTopK(shoulds.map { case STerm(f, t, w, avgdl) =>
-          new TermScorer(new TermIterator(byTerm.getOrElse((f, t), Vector.empty)), w).withAvgdl(avgdl)
+          new TermScorer(postings.iterator(f, t), w).withAvgdl(avgdl)
         }.toIndexedSeq, k, excluded)
       case SBool(m, shoulds, n) if m.isEmpty && n.isEmpty =>
         // mixed disjunction (phrases/expansions among the clauses):
         // MAXSCORE pruning — non-essential clauses advance, never enumerate
-        maxscoreTopK(shoulds.map(buildScorer(_, byTerm, docSets)).toIndexedSeq, k, excluded)
+        maxscoreTopK(shoulds.map(buildScorer(_, postings, docSets)).toIndexedSeq, k, excluded)
       case other =>
-        exhaustiveTopK(buildScorer(other, byTerm, docSets), k, excluded)
+        exhaustiveTopK(buildScorer(other, postings, docSets), k, excluded)
     }
 
   /** Every match of the scorer tree, unranked — the field-sort path. */
   def allScored(
       sq: SQ,
-      byTerm: Map[(String, String), IndexedSeq[Block]],
+      postings: ShardPostings,
       excluded: Long => Boolean,
       docSets: Map[Int, Array[Long]] = Map.empty): Seq[(Long, Double)] = {
-    val root = buildScorer(sq, byTerm, docSets)
+    val root = buildScorer(sq, postings, docSets)
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
     while (root.doc != NoMoreDocs) {
       if (!excluded(root.doc)) out += ((root.doc, root.score))
@@ -480,12 +505,12 @@ object SegmentSearcher {
     */
   def exhaustiveCounted(
       sq: SQ,
-      byTerm: Map[(String, String), IndexedSeq[Block]],
+      postings: ShardPostings,
       k: Int,
       excluded: Long => Boolean,
       onMatch: Long => Unit,
       docSets: Map[Int, Array[Long]] = Map.empty): Seq[(Long, Double)] =
-    exhaustiveTopK(buildScorer(sq, byTerm, docSets), k, d => {
+    exhaustiveTopK(buildScorer(sq, postings, docSets), k, d => {
       val ex = excluded(d)
       if (!ex) onMatch(1L)
       ex

@@ -24,7 +24,11 @@ final case class SegmentRow(
     maxDoc: Long,
     bytes: Long,
     pid: Int, // encoding partition, for lineage
-    blocks: Seq[Block])
+    blocks: Seq[Block],
+    /** dl-marker rows only (empty elsewhere): the field's [[Codec.Norms]]
+      * bytes for docs `minDoc..maxDoc` of the shard.
+      */
+    norms: Array[Byte])
 
 /** Per-stage, per-partition build lineage (north rule: resumable with
   * per-partition lineage + row/term/byte metrics).
@@ -48,14 +52,19 @@ final case class MarkerStat(pid: Int, field: String, docCount: Long, sumDl: Long
   *
   * Layout under `dir/`:
   *   termstats/   (field, term, df, cf) parquet (vocab-sized — stays a table)
-  *   segments/    SegmentRow parquet, range-partitioned by (shard, field, term, docId)
+  *   segments/    SegmentRow parquet, range-partitioned by (shard, field, term, docId).
+  *                Each (shard, field) has one dl-marker row per generation
+  *                whose `norms` column holds the field length of every doc
+  *                in its range, once (Lucene's per-document norm)
+  *   stored/, keys/, tombstones/  stored fields, upsert key map, deletes
   *   lineage/     lineage.tsv — per-partition LineageRow sidecar per stage
   *   checkpoints/ <stage>.json markers — a rerun skips completed stages —
-  *                plus the driver-side metadata sidecars (round 6):
+  *                plus the driver-side metadata sidecars:
+  *                format.json ([[FormatVersion]]; every reader and writer
+  *                refuses another version), shardspec.json,
   *                spec.tsv (indexField, source, kind, analyzer, boost),
   *                fieldstats.tsv (gen, field, docCount, avgdl, sumDl).
-  *                Pre-round-6 dirs carry spec/ + fieldstats/ parquet
-  *                instead; readers fall back to those when no sidecar exists
+  * Every parquet table is written with zstd ([[writeTable]]).
   *
   * Production note: each stage's write maps 1:1 onto an Iceberg table commit
   * (snapshot id = the checkpoint); this sandbox has no Iceberg jars, so the
@@ -69,13 +78,8 @@ object SegmentStore {
   // spec, fieldstats and lineage are #fields / #generations×#fields /
   // #partitions-sized metadata that is ALREADY driver-resident at every
   // write site (FieldDefs in memory, marker-accumulator folds, lineage
-  // accumulators) — the Lucene segments-info/commit-user-data analog.
-  // Round-5 wrote and re-read them as parquet THROUGH Spark: one scheduled
-  // job (plus a full plan/optimize cycle) per tiny table per build/open —
-  // pure serial tax on the build path and a fixed per-open cost on every
-  // maintenance op (guide §1.2: remove driver-synchronized passes first).
-  // They are now TSV sidecars written/read driver-side with zero jobs; the
-  // parquet read paths remain as fallbacks so pre-round-6 dirs still open.
+  // accumulators) — the Lucene segments-info/commit-user-data analog, as
+  // TSV sidecars written and read driver-side with zero jobs.
 
   private def escTsv(s: String): String = {
     val sb = new StringBuilder(s.length)
@@ -137,22 +141,11 @@ object SegmentStore {
       .map(c => (c(0), FieldStats(c(1), c(2).toLong, java.lang.Double.parseDouble(c(3)), c(4).toLong)))
       .groupBy(_._1).view.mapValues(_.map(_._2)).toMap)
 
-  /** Upsert one generation's rows into the sidecar. A pre-round-6 dir
-    * (parquet generations, no sidecar) is seeded first by folding the
-    * parquet ONCE under a `legacy` key — including the pre-sumDl per-row
-    * reconstruction [[readFieldStats]] performs — so mixed stores keep the
-    * exact openMerged fold. Idempotent per gen key (a replayed batch
-    * overwrites its own rows with identical values).
+  /** Upsert one generation's rows into the sidecar. Idempotent per gen key
+    * (a replayed batch overwrites its own rows with identical values).
     */
-  private[graft] def updateFieldStatsGen(
-      spark: SparkSession, dir: String, gen: String, rows: Seq[FieldStats]): Unit = {
-    val existing = readFieldStatsGens(dir).orElse {
-      if (!Files.exists(Paths.get(s"$dir/fieldstats"))) None
-      else Some(Map("legacy" -> readFieldStats(spark, s"$dir/fieldstats").collect().toSeq
-        .map(r => FieldStats(r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3)))))
-    }.getOrElse(Map.empty)
-    writeFieldStatsGens(dir, existing + (gen -> rows))
-  }
+  private[graft] def updateFieldStatsGen(dir: String, gen: String, rows: Seq[FieldStats]): Unit =
+    writeFieldStatsGens(dir, readFieldStatsGens(dir).getOrElse(Map.empty) + (gen -> rows))
 
   /** Lineage rows as a TSV sidecar (accumulator output — driver data). */
   private def lineageTsvPath(dir: String) = Paths.get(s"$dir/lineage/lineage.tsv")
@@ -166,6 +159,46 @@ object SegmentStore {
     else readTsv(lineageTsvPath(dir))
       .map(c => LineageRow(c(0), c(1).toInt, c(2).toLong, c(3).toLong, c(4).toLong))
 
+  // ---- format version ----------------------------------------------------
+
+  /** On-disk format of this reader and writer: norms on the dl-marker rows,
+    * blocks without dls, zstd tables. Every earlier layout has no
+    * `checkpoints/format.json` and counts as format 1.
+    */
+  val FormatVersion = 2
+
+  private def formatPath(dir: String) = Paths.get(s"$dir/checkpoints/format.json")
+
+  private def writeFormat(dir: String): Unit = {
+    Files.createDirectories(formatPath(dir).getParent)
+    Files.writeString(formatPath(dir), s"""{"format": $FormatVersion}""")
+  }
+
+  /** Fail fast on an index dir in another format: opened as this one it
+    * would fail late or mis-score (format 1 blocks carry no norms).
+    */
+  def requireFormat(dir: String): Unit = {
+    val found =
+      if (!Files.exists(formatPath(dir))) "1 (no checkpoints/format.json)"
+      else """"format":\s*(\d+)""".r.findFirstMatchIn(Files.readString(formatPath(dir)))
+        .map(_.group(1)).getOrElse("unreadable")
+    if (found != FormatVersion.toString)
+      throw new IllegalStateException(
+        s"$dir is in index format $found; this build reads and writes only format " +
+          s"$FormatVersion — rebuild the index")
+  }
+
+  /** Writers: stamp a fresh dir with [[FormatVersion]], or check the stamp of
+    * a dir that already holds a committed stage.
+    */
+  private[graft] def initFormat(dir: String): Unit =
+    if (Files.exists(formatPath(dir)) || stageDone(dir, "spec")) requireFormat(dir)
+    else writeFormat(dir)
+
+  /** Every index table is written through here: parquet, always zstd. */
+  private[graft] def writeTable(ds: Dataset[_], mode: SaveMode, path: String): Unit =
+    ds.write.mode(mode).option("compression", "zstd").parquet(path)
+
   // ---- shard spec (docsPerShard) ---------------------------------------
   // Persisted so readers can route a docId to its shard without scanning
   // segment metadata — tombstone rows are co-grouped with their shard's
@@ -175,30 +208,31 @@ object SegmentStore {
 
   def hasShardSpec(dir: String): Boolean = Files.exists(shardSpecPath(dir))
 
+  /** `docsPerShard` is capped at Int.MaxValue: norms are dense arrays
+    * indexed by a doc's offset within its shard.
+    */
   def writeShardSpec(dir: String, docsPerShard: Long): Unit = {
+    require(docsPerShard > 0 && docsPerShard <= Int.MaxValue,
+      s"docsPerShard must be in 1..${Int.MaxValue}, got $docsPerShard")
     Files.createDirectories(shardSpecPath(dir).getParent)
     Files.writeString(shardSpecPath(dir), s"""{"docsPerShard": $docsPerShard}""")
   }
 
+  /** The committed shard spec. Every writer commits it with the spec, so a
+    * missing one is never guessed: a wrong docsPerShard would route deleted
+    * docIds to the wrong shard co-group and deleted docs would reappear.
+    */
   def docsPerShardOf(dir: String): Long =
-    if (!Files.exists(shardSpecPath(dir))) {
-      // A lost shardspec under an index WITH tombstones is not guessable:
-      // a wrong docsPerShard routes deleted docIds to the wrong shard
-      // co-group and deleted docs silently reappear. Refuse to serve.
-      if (Files.exists(Paths.get(s"$dir/tombstones")))
-        throw new IllegalStateException(
-          s"$dir has tombstones but no checkpoints/shardspec.json — refusing to guess " +
-            "docsPerShard (deletes would be silently mis-routed); restore the shardspec " +
-            "or run optimize() to rewrite the index")
-      1L << 20
-    } else """"docsPerShard":\s*(\d+)""".r.findFirstMatchIn(Files.readString(shardSpecPath(dir)))
-      .map(_.group(1).toLong).getOrElse(1L << 20)
+    """"docsPerShard":\s*(\d+)""".r.findFirstMatchIn(Files.readString(shardSpecPath(dir)))
+      .map(_.group(1).toLong)
+      .getOrElse(throw new IllegalStateException(s"unreadable ${shardSpecPath(dir)}"))
 
   def stageDone(dir: String, stage: String): Boolean = Files.exists(ckptPath(dir, stage))
 
-  /** One map-side-combined posting run (see the combine note in
-    * [[encodeSegments]]): (shard, field, term, minDoc, docIds ascending,
-    * tfs, dls, positions).
+  /** One posting run of a (shard, field, term) — a tokenize flush window's
+    * run ([[IndexBuilder.tokenizeMiniRuns]]) or one decoded segment row
+    * ([[optimize]]): (shard, field, term, minDoc, docIds ascending, tfs,
+    * dls, positions).
     */
   private[index] type MiniRun =
     (Int, String, String, Long, Array[Long], Array[Int], Array[Int], Array[Array[Int]])
@@ -211,8 +245,7 @@ object SegmentStore {
   private[index] val FlushPostings: Int = 1 << 20
 
   /** Growable parallel posting buffers for one (shard, field, term)
-    * mini-run of the map-side combine (shared with the fused
-    * tokenize-to-mini-run pass, [[IndexBuilder.tokenizeMiniRuns]]).
+    * mini-run ([[IndexBuilder.tokenizeMiniRuns]], [[decodeShard]]).
     */
   private[index] final class RunBuf {
     private var n = 0
@@ -221,6 +254,7 @@ object SegmentStore {
     private var tfs = new Array[Int](4)
     private var dls = new Array[Int](4)
     private var poss = new Array[Array[Int]](4)
+    def nonEmpty: Boolean = n > 0
     def add(docId: Long, tf: Int, dl: Int, p: Array[Int]): Unit = {
       if (n == docIds.length) {
         val c = n * 2
@@ -273,8 +307,8 @@ object SegmentStore {
     * per-partition lineage comes back through an accumulator instead of a
     * read-back agg. Term/field stats are DERIVED from the encoded segment
     * rows afterwards (df/cf per (shard, field, term) ride on every row;
-    * dl-marker runs become stats-only rows carrying per-shard
-    * (docCount, Σdl)) — the Lucene per-segment-stats fold, expressed as a
+    * each (shard, field)'s dl-marker row carries its (docCount, Σdl) and
+    * norms) — the Lucene per-segment-stats fold, expressed as a
     * vocab×shards metadata aggregation over a column-pruned read of the
     * just-written parquet, NOT a second tokenize of the corpus. Block-max
     * bounds use block-local encAvgdl (see [[Codec.RunEncoder.encodeLocal]]),
@@ -297,6 +331,7 @@ object SegmentStore {
       if (failAfterStage.contains(stage)) throw new RuntimeException(s"failpoint after $stage")
 
     Timing.timed("build.spec") {
+      initFormat(dir)
       if (!stageDone(dir, "spec")) writeSpec(spark, dir, fields)
       if (!Files.exists(shardSpecPath(dir))) writeShardSpec(dir, docsPerShard)
     }
@@ -311,14 +346,15 @@ object SegmentStore {
     // are requested.
     def runStored(): Unit =
       Timing.timed("build.stored") {
-        // AQE-coalescible (no explicit count) — see the encodeSegments note;
+        // AQE-coalescible (no explicit count) — see the encodeRuns note;
         // also keeps output files near the advisory size instead of one
         // sliver per session shuffle partition (guide: file sizing on write)
-        docs.select(col(docIdCol).cast("long").as("docId") +: storedColumns.map(col): _*)
-          .withColumn("shard", (col("docId") / lit(docsPerShard)).cast("int"))
-          .repartition(col("shard"))
-          .sortWithinPartitions("docId")
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/stored")
+        writeTable(
+          docs.select(col(docIdCol).cast("long").as("docId") +: storedColumns.map(col): _*)
+            .withColumn("shard", (col("docId") / lit(docsPerShard)).cast("int"))
+            .repartition(col("shard"))
+            .sortWithinPartitions("docId"),
+          SaveMode.Overwrite, s"$dir/stored")
         commitStage(dir, "stored", Map("columns" -> storedColumns.size.toLong))
       }
     val needStored = storedColumns.nonEmpty && !stageDone(dir, "stored")
@@ -353,39 +389,26 @@ object SegmentStore {
     }
     if (needSegments) try {
       Timing.timed("build.encode") {
-        // dl-marker rows are NOT shipped through the shuffle (round 5): the
-        // encode tasks reconstruct each (shard, field)'s marker from the
+        // dl-marker rows are NOT shipped through the shuffle: the encode
+        // tasks reconstruct each (shard, field)'s marker and norms from the
         // postings they already stream — exact, because a marker exists iff
-        // the (field, doc) has ≥1 posting — which drops one shuffle row per
-        // (doc, field) from the build's widest stage. Falls back to shipped
-        // markers only for docsPerShard beyond the BitSet range.
-        val recon = docsPerShard <= Int.MaxValue
+        // the (field, doc) has ≥1 posting.
         // per-partition lineage rides back on an accumulator — the round-2
         // build re-read the committed segments for a metadata agg (a pure
         // driver-synchronized second job)
         val linAcc = spark.sparkContext.collectionAccumulator[LineageRow]("graft.lineage")
         val mkAcc = spark.sparkContext.collectionAccumulator[MarkerStat]("graft.markerstats")
-        // recon path: the FUSED tokenize→mini-run pass (no per-posting
-        // object stream — see IndexBuilder.tokenizeMiniRuns); the wide-shard
-        // fallback keeps the posting stream since it must ship markers
-        val encoded =
-          if (recon)
-            encodeRuns(IndexBuilder.tokenizeMiniRuns(docs, docIdCol, fields, docsPerShard),
-              Some(linAcc), reconstructMarkers = true, Some(mkAcc), docsPerShard)
-          else
-            encodeSegments(IndexBuilder.tokenizePostingsWithMarkers(docs, docIdCol, fields),
-              docsPerShard, Some(linAcc), reconstructMarkers = false, markerAcc = Some(mkAcc))
-        encoded.write.mode(SaveMode.Overwrite).parquet(s"$dir/segments")
+        // the FUSED tokenize→mini-run pass: no per-posting object stream
+        val encoded = encodeRuns(IndexBuilder.tokenizeMiniRuns(docs, docIdCol, fields, docsPerShard),
+          Some(linAcc), Some(mkAcc), docsPerShard)
+        writeTable(encoded, SaveMode.Overwrite, s"$dir/segments")
         // dedupe by pid: a speculative/retried task may report twice; the
         // rows are deterministic per partition so first-wins is exact
         val rows = {
           import scala.jdk.CollectionConverters._
           linAcc.value.asScala.groupBy(_.pid).map(_._2.head).toIndexedSeq.sortBy(_.pid)
         }
-        markerStatsMem = {
-          import scala.jdk.CollectionConverters._
-          Some(foldMarkerStats(mkAcc.value.asScala.toSeq))
-        }
+        markerStatsMem = Some(foldMarkerStats(mkAcc))
         writeLineage(dir, rows) // accumulator output — driver write, no job
         commitStage(dir, "segments",
           Map("segmentRows" -> rows.map(_.rowsOut).sum, "postingBytes" -> rows.map(_.bytesOut).sum,
@@ -410,11 +433,7 @@ object SegmentStore {
         // so the totals are bit-identical to a direct postings aggregation
         val seg = readSegments(spark, s"$dir/segments")
           .select(col("field"), col("term"), col("df"), col("cf"))
-        seg.filter(col("term") =!= IndexBuilder.DlMarker)
-          .groupBy(col("field"), col("term"))
-          .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
-          .as[TermStats]
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/termstats")
+        writeTermStats(seg, s"$dir/termstats")
         // field stats: folded from the encode job's marker accumulator when
         // the encode ran in THIS call (zero extra jobs); the read-back agg
         // over the marker segment rows is the resume path (segments stage
@@ -467,45 +486,25 @@ object SegmentStore {
     * ends its changes loop on a design-doc change and starts a fresh
     * digest-named dir).
     */
-  def specChanged(spark: SparkSession, dir: String, fields: Seq[FieldDef]): Boolean =
-    stageDone(dir, "spec") && persistedSpecDigest(spark, dir).exists(_ != specDigest(fields))
+  def specChanged(dir: String, fields: Seq[FieldDef]): Boolean =
+    stageDone(dir, "spec") && persistedSpecDigest(dir).exists(_ != specDigest(fields))
 
   private def specDigestPath(dir: String) = Paths.get(s"$dir/checkpoints/spec.digest")
 
-  /** The committed spec's digest. Served from the tiny digest file when
-    * present (written by [[writeSpec]] since round 4 — cheap enough to poll
-    * every micro-batch); falls back to re-digesting the spec parquet for
-    * dirs written by earlier rounds.
+  /** The committed spec's digest, from the tiny digest file [[writeSpec]]
+    * writes — cheap enough to poll every micro-batch.
     */
-  def persistedSpecDigest(spark: SparkSession, dir: String): Option[String] =
+  def persistedSpecDigest(dir: String): Option[String] =
     if (Files.exists(specDigestPath(dir))) Some(Files.readString(specDigestPath(dir)).trim)
-    else if (stageDone(dir, "spec")) Some(specDigest(open0Fields(spark, dir)))
     else None
 
-  /** Spec schema pinned at read (round 6): schema inference over the spec
-    * parquet was a per-open job; `boost` entered the schema in round 2, so a
-    * round-1 dir reads it as null → 1.0.
-    */
-  private val SpecSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "indexField STRING, source STRING, kind STRING, analyzer STRING, boost DOUBLE")
-
-  private def open0Fields(spark: SparkSession, dir: String): Seq[FieldDef] = {
-    import spark.implicits._
-    def mk(idxF: String, src: String, kind: String, an: String, boost: Double): FieldDef =
-      FieldDef(idxF, src, kind match {
-        case "text" => TextField(Analyzers.byName(an))
+  private def readFields(dir: String): Seq[FieldDef] =
+    readTsv(specTsvPath(dir)).map { c =>
+      FieldDef(c(0), c(1), c(2) match {
+        case "text" => TextField(Analyzers.byName(c(3)))
         case "string" => StringField
-      }, boost)
-    // sidecar first (driver read, no job); parquet fallback for old dirs
-    if (Files.exists(specTsvPath(dir)))
-      readTsv(specTsvPath(dir)).map(c => mk(c(0), c(1), c(2), c(3), c(4).toDouble))
-    else
-      spark.read.schema(SpecSchema).parquet(s"$dir/spec")
-        .select(col("indexField"), col("source"), col("kind"), col("analyzer"),
-          coalesce(col("boost"), lit(1.0)).as("boost"))
-        .as[(String, String, String, String, Double)].collect()
-        .map { case (idxF, src, kind, an, boost) => mk(idxF, src, kind, an, boost) }.toSeq
-  }
+      }, c(4).toDouble)
+    }
 
   /** Commit the index field spec (queryable name, source column, kind,
     * analyzer) — readable without the builder, so [[open]] reconstructs
@@ -528,105 +527,47 @@ object SegmentStore {
     commitStage(dir, "spec", Map("fields" -> fields.size.toLong))
   }
 
-  /** The encode pipeline: explicit range-partitioned shuffle of the term
-    * space within doc shards; the sort brings each (shard, field, term) run
-    * contiguous and docId-ordered for the block encoder (SURVEY.md §2.5).
-    * Shared by the batch build and the incremental (streaming) appender.
-    */
-  /** `reconstructMarkers`: for inputs WITHOUT dl-marker rows (the optimize
-    * path decodes postings only — stats-only rows have no blocks to
-    * decode), re-derive each (shard, field)'s marker row inside the encode
-    * task: partitions hold whole shards and runs arrive sorted by
-    * (shard, field, term, docId), so a per-(shard, field) BitSet over
-    * LOCAL docIds (≤ docsPerShard bits, reused across groups) counts each
-    * doc once and sums its dl — field stats then fold from segment
-    * metadata with NO extra pass over the postings. Never set this when
-    * the input already carries marker rows (they would double-count).
-    */
-  def encodeSegments(
-      postings: Dataset[Posting],
-      docsPerShard: Long,
-      lineageAcc: Option[org.apache.spark.util.CollectionAccumulator[LineageRow]] = None,
-      reconstructMarkers: Boolean = false,
-      markerAcc: Option[org.apache.spark.util.CollectionAccumulator[MarkerStat]] = None): Dataset[SegmentRow] = {
-    val spark = postings.sparkSession
-    import spark.implicits._
-    // ---- map-side run combine (round 6; guide §2.3 "aggregate before you
-    // shuffle"). The old shape shuffled ONE ROW PER POSTING and then
-    // Tungsten-sorted every posting row by (shard, field, term, docId)
-    // inside the encode partitions — measured at 4 cores / 613k turns that
-    // in-partition sort alone was HALF the whole encode stage (5.7 s of
-    // 11.8 s) and the posting-row shuffle another quarter. Postings are now
-    // combined into per-(shard, field, term) MINI-RUNS inside each map task
-    // first — the Lucene flush-then-merge shape: the exchange ships one row
-    // per term per flush window (~vocab-sized, not corpus-sized; same
-    // payload bytes), and the reduce sort orders run KEYS instead of every
-    // posting. The encode tasks merge a term's mini-runs back into one
-    // docId-ordered run: mini-runs are docId-sorted and (build path) cover
-    // disjoint docId ranges, so the merge is a concatenation; overlapping
-    // ranges (possible on exotic inputs) fall back to an index sort of that
-    // run. The encoder then sees EXACTLY the posting sequence the old
-    // per-posting sort produced, so every SegmentRow — blocks, stats,
-    // min/max — is bit-identical (SegmentSpec/StreamingSpec/WandSpec +
-    // the seg_* oracle gates pin this end-to-end).
-    //
-    // Memory bound: a map task buffers at most FlushPostings postings
-    // before flushing its mini-runs downstream — Lucene's flush-by-RAM —
-    // so a giant input split cannot grow the combine without bound.
-    //
-    // Shard exchange notes (unchanged): hash-partition by shard (shard
-    // sizes are bounded by docsPerShard — balanced by construction); no
-    // explicit partition count, AQE coalesces from observed sizes, and
-    // coalescing merges whole post-shuffle partitions so the whole-shards-
-    // per-partition invariant the marker reconstruction needs is preserved.
-    val mini: Dataset[SegmentStore.MiniRun] = postings.mapPartitions { it =>
-      new Iterator[SegmentStore.MiniRun] {
-        private var out: Iterator[SegmentStore.MiniRun] = Iterator.empty
-        private def refill(): Unit = {
-          val bufs = new scala.collection.mutable.HashMap[(Int, String, String), RunBuf]()
-          var buffered = 0
-          while (it.hasNext && buffered < FlushPostings) {
-            val p = it.next()
-            val shard = (p.docId / docsPerShard).toInt
-            bufs.getOrElseUpdate((shard, p.field, p.term), new RunBuf())
-              .add(p.docId, p.tf, p.dl, p.positions)
-            buffered += 1
-          }
-          out = bufs.iterator.map { case ((shard, field, term), b) =>
-            val (d, t, l, ps) = b.result()
-            (shard, field, term, d(0), d, t, l, ps)
-          }
-        }
-        def hasNext: Boolean = {
-          while (!out.hasNext && it.hasNext) refill()
-          out.hasNext
-        }
-        def next(): SegmentStore.MiniRun = out.next()
-      }
-    }
-    encodeRuns(mini, lineageAcc, reconstructMarkers, markerAcc, docsPerShard)
-  }
-
-  /** The post-combine half of [[encodeSegments]]: shard-shuffle the
-    * mini-runs, merge each (shard, field, term)'s runs docId-ascending, and
-    * block-encode. Callable directly with mini-runs built by the FUSED
-    * tokenize pass ([[IndexBuilder.tokenizeMiniRuns]]), which skips the
-    * per-posting object stream entirely.
+  /** The encode pipeline: shard-shuffle the mini-runs, sort them by
+    * (shard, field, term, minDoc) within each partition, and block-encode
+    * ([[encodeSorted]]). Shard exchange: hash-partition by shard (shard
+    * sizes are bounded by docsPerShard — balanced by construction); no
+    * explicit partition count, AQE coalesces from observed sizes, and
+    * coalescing merges whole post-shuffle partitions, so every partition
+    * still holds whole shards. Shared by the batch build, the incremental
+    * appender and a re-sharding [[optimize]].
     */
   private[graft] def encodeRuns(
       mini: Dataset[SegmentStore.MiniRun],
       lineageAcc: Option[org.apache.spark.util.CollectionAccumulator[LineageRow]],
-      reconstructMarkers: Boolean,
       markerAcc: Option[org.apache.spark.util.CollectionAccumulator[MarkerStat]],
       docsPerShard: Long): Dataset[SegmentRow] = {
-    val spark = mini.sparkSession
-    import spark.implicits._
-    val sortedRuns = mini
-      .toDF("shard", "field", "term", "minDoc", "docIds", "tfs", "dls", "poss")
-      .repartition(col("shard"))
-      .sortWithinPartitions(col("shard"), col("field"), col("term"), col("minDoc"))
-      .as[SegmentStore.MiniRun]
+    import mini.sparkSession.implicits._
+    encodeSorted(
+      mini.toDF("shard", "field", "term", "minDoc", "docIds", "tfs", "dls", "poss")
+        .repartition(col("shard"))
+        .sortWithinPartitions(col("shard"), col("field"), col("term"), col("minDoc"))
+        .as[SegmentStore.MiniRun],
+      lineageAcc, markerAcc, docsPerShard)
+  }
 
+  /** Block-encode mini-runs that arrive with each partition holding whole
+    * shards, each (shard, field) group contiguous and, within it, each
+    * term's runs contiguous in ascending minDoc. A term's runs are merged
+    * into one docId-ordered run: they are docId-sorted and (build path)
+    * cover disjoint docId ranges, so the merge is a concatenation;
+    * overlapping ranges fall back to an index sort of that run.
+    *
+    * Each (shard, field) group also yields its dl-marker row: the group's
+    * (docCount, Σdl) as (df, cf) and its [[Codec.Norms]], folded from the
+    * postings the task already streams (a doc's dl is recorded on its first
+    * posting in the field), so field stats and norms need no extra pass.
+    */
+  private def encodeSorted(
+      sortedRuns: Dataset[SegmentStore.MiniRun],
+      lineageAcc: Option[org.apache.spark.util.CollectionAccumulator[LineageRow]],
+      markerAcc: Option[org.apache.spark.util.CollectionAccumulator[MarkerStat]],
+      docsPerShard: Long): Dataset[SegmentRow] = {
+    import sortedRuns.sparkSession.implicits._
     val encodeFn = (it: Iterator[SegmentStore.MiniRun]) => {
       val pid = TaskContext.getPartitionId()
       val src = it.buffered
@@ -667,21 +608,27 @@ object SegmentStore {
           System.arraycopy(l2, 0, dls, 0, n)
           System.arraycopy(p2, 0, poss, 0, n)
         }
-        // marker-reconstruction state (reconstructMarkers only): the
-        // current (shard, field) group's distinct-doc bitset + stats
+        // the current (shard, field) group's marker: dl per doc offset in
+        // the shard (0 = no posting yet; every real dl is ≥ 1), reused across
+        // groups and grown on demand — docIds are dense (DocIds.assign), so
+        // it tops out at the shard's actual population
         private var mShard = -1
         private var mField: String = null
-        private var mBits: java.util.BitSet = null
+        private var mDls = new Array[Int](1024)
         private var mCount = 0L
         private var mSum = 0L
         private var mMin = Long.MaxValue
         private var mMax = Long.MinValue
         private def flushMarker(): SegmentRow = {
+          val base = mShard.toLong * docsPerShard
+          val lo = (mMin - base).toInt
+          val hi = (mMax - base).toInt + 1
+          val norms = Codec.encodeNorms(mDls, lo, hi)
+          java.util.Arrays.fill(mDls, lo, hi, 0)
           val r = SegmentRow(mShard, mField, IndexBuilder.DlMarker,
-            mCount, mSum, mMin, mMax, 0L, pid, Vector.empty)
+            mCount, mSum, mMin, mMax, norms.length.toLong, pid, Vector.empty, norms)
           mField = null; mCount = 0L; mSum = 0L
           mMin = Long.MaxValue; mMax = Long.MinValue
-          if (mBits != null) mBits.clear()
           r
         }
         def hasNext: Boolean = src.hasNext || mField != null
@@ -690,25 +637,14 @@ object SegmentStore {
           val shard = src.head._1
           val field = src.head._2
           val term = src.head._3
-          if (reconstructMarkers && mField != null &&
-            (shard != mShard || field != mField)) {
+          if (mField != null && (shard != mShard || field != mField)) {
             return flushMarker() // group changed: emit previous marker first
           }
-          if (reconstructMarkers && mField == null) {
-            mShard = shard; mField = field
-            if (mBits == null) {
-              require(docsPerShard <= Int.MaxValue,
-                s"reconstructMarkers needs docsPerShard <= Int.MaxValue, got $docsPerShard")
-              // grow-on-demand: docIds are dense (DocIds.assign), so the
-              // bitset tops out at the shard's ACTUAL population — never the
-              // nominal docsPerShard (which may be 2^31: a 256 MB/task
-              // preallocation for a shard holding a few million docs)
-              mBits = new java.util.BitSet()
-            }
-          }
+          if (mField == null) { mShard = shard; mField = field }
+          val base = shard.toLong * docsPerShard
           // merge the key's mini-runs into the reusable buffers; min/max and
-          // cf accumulate during the append (order-insensitive), the bitset
-          // marker fold likewise counts each (field, doc) once in any order
+          // cf accumulate during the append (order-insensitive), the marker
+          // fold likewise records each (field, doc) once in any order
           var n = 0
           var cf = 0L
           var minDoc = Long.MaxValue
@@ -728,35 +664,25 @@ object SegmentStore {
               docIds(n) = docId; tfs(n) = rt(i); dls(n) = rl(i); poss(n) = rp(i)
               n += 1
               cf += rt(i)
-              if (reconstructMarkers) {
-                // count each (field, doc) once across all its term runs
-                val local = (docId - shard.toLong * docsPerShard).toInt
-                if (!mBits.get(local)) {
-                  mBits.set(local)
-                  mCount += 1
-                  mSum += rl(i)
-                  if (docId < mMin) mMin = docId
-                  if (docId > mMax) mMax = docId
-                }
+              val local = (docId - base).toInt
+              if (local >= mDls.length)
+                mDls = java.util.Arrays.copyOf(mDls, math.max(local + 1, mDls.length * 2))
+              if (mDls(local) == 0) {
+                mDls(local) = rl(i)
+                mCount += 1
+                mSum += rl(i)
+                if (docId < mMin) mMin = docId
+                if (docId > mMax) mMax = docId
               }
               i += 1
             }
           }
-          if (term == IndexBuilder.DlMarker) {
-            // dl-marker run → STATS-ONLY segment row, no blocks: markers
-            // carry tf = dl per (doc, field), so this run's (df, cf) IS the
-            // shard's (docCount, Σdl) for the field. The stats stage folds
-            // these rows into fieldstats — field stats ride the encode
-            // shuffle for free instead of paying their own corpus pass.
-            SegmentRow(shard, field, term, n.toLong, cf, minDoc, maxDoc, 0L, pid, Vector.empty)
-          } else {
-            if (!runSorted) sortRun(n)
-            val blocks = enc.encodeLocal(docIds, tfs, dls, poss, n)
-            var bytes = 0L
-            blocks.foreach(b => bytes +=
-              b.docBytes.length + b.tfBytes.length + b.dlBytes.length + b.posBytes.length)
-            SegmentRow(shard, field, term, n.toLong, cf, minDoc, maxDoc, bytes, pid, blocks)
-          }
+          if (!runSorted) sortRun(n)
+          val blocks = enc.encodeLocal(docIds, tfs, dls, poss, n)
+          var bytes = 0L
+          blocks.foreach(b => bytes += b.docBytes.length + b.tfBytes.length + b.posBytes.length)
+          SegmentRow(shard, field, term, n.toLong, cf, minDoc, maxDoc, bytes, pid, blocks,
+            Array.emptyByteArray)
         }
       }
     }
@@ -788,8 +714,8 @@ object SegmentStore {
           }
           def next(): SegmentRow = {
             val r = out.next()
-            // stats-only marker rows are metadata, not postings — keep
-            // the lineage invariant rowsIn == postings tokenized
+            // marker rows are metadata, not postings — keep the lineage
+            // invariant rowsIn == postings tokenized
             if (r.term != IndexBuilder.DlMarker) {
               rowsIn += r.df; rowsOut += 1; bytesOut += r.bytes
             } else if (markerAcc.isDefined) {
@@ -808,22 +734,16 @@ object SegmentStore {
     * division is the same long→double cast as the read-back agg's
     * `sum(cf)/sum(df)`, so the stats are bit-identical.
     */
-  /** [[foldMarkerStats]] straight off an accumulator — for the incremental
-    * appender (same dedupe + fold, one definition).
-    */
-  private[graft] def foldMarkerStatsPublic(
+  private[graft] def foldMarkerStats(
       acc: org.apache.spark.util.CollectionAccumulator[MarkerStat]): IndexedSeq[FieldStats] = {
     import scala.jdk.CollectionConverters._
-    foldMarkerStats(acc.value.asScala.toSeq)
-  }
-
-  private def foldMarkerStats(rows: Seq[MarkerStat]): IndexedSeq[FieldStats] =
-    rows.groupBy(m => (m.pid, m.field)).map(_._2.head).toSeq
+    acc.value.asScala.toSeq.groupBy(m => (m.pid, m.field)).map(_._2.head).toSeq
       .groupBy(_.field).map { case (f, ms) =>
         val dc = ms.map(_.docCount).sum
         val sd = ms.map(_.sumDl).sum
         FieldStats(f, dc, sd.toDouble / dc.toDouble, sd)
       }.toIndexedSeq.sortBy(_.field)
+  }
 
   /** Open an index whose `termstats`/`fieldstats`/`segments` hold several
     * appended generations (incremental maintenance): stats are folded at
@@ -858,151 +778,147 @@ object SegmentStore {
   /** `_optimize` analog (reference DatabaseIndexer.java:274-279,
     * forceMerge(1)): decode every run, drop tombstoned docs, and re-encode
     * each (shard, field, term) as a single fresh run with tight blocks.
-    * Writes a full replacement `segments/` + stats (new dir returned).
+    * Writes a full replacement `segments/` + stats into `outDir`.
     *
-    * Single-pass like the build (round 5): decode → anti-join → ONE
-    * shuffle+encode job; the encode tasks reconstruct each
-    * (shard, field)'s marker row from the postings they already see
-    * (`reconstructMarkers` — a per-group distinct-doc BitSet), and
-    * term/field stats fold from the new segments' metadata. No persist of
-    * the decoded postings, no separate stats aggregations — the old shape
-    * ran three corpus-scale passes over a MEMORY_AND_DISK cache.
+    * One job over the segment rows: they are co-grouped by shard with the
+    * shard's tombstones (the query path's co-group), and each shard decodes
+    * its rows straight into mini-runs, taking each doc's dl from the
+    * shard's norms ([[decodeShard]]). With the shard spec unchanged the
+    * co-group's partitions already hold whole shards in encode order, so
+    * the runs are block-encoded in place; a re-shard (`docsPerShard`
+    * differing from the source's) goes through the shard shuffle of
+    * [[encodeRuns]]. Term and field stats fold from the new segments'
+    * metadata and the encode's marker accumulator.
     */
   def optimize(spark: SparkSession, dir: String, outDir: String, docsPerShard: Long = -1L): Unit = {
     import spark.implicits._
+    requireFormat(dir)
     // default (non-positive): carry the source index's shard spec — a
     // maintenance op should not silently re-shard the corpus
-    val dps = if (docsPerShard > 0) docsPerShard else docsPerShardOf(dir)
-    // tombstones dropped via anti-join (never a driver-side Set — at scale
-    // deletes are normal state, potentially corpus-sized)
-    val decoded: Dataset[Posting] = readSegments(spark, s"$dir/segments").as[SegmentRow]
-      .flatMap { row =>
-        row.blocks.iterator.flatMap(Codec.decode(_).iterator)
-          .map(d => Posting(row.field, row.term, d.docId, d.tf, d.positions, d.dl))
-      }
-    // re-select in Posting declaration order: the using-join moves docId to
-    // the front, and encodeSegments binds a positional tuple encoder
-    val postings = decoded.join(deletedDocsDF(spark, dir), Seq("docId"), "left_anti")
-      .select("field", "term", "docId", "tf", "positions", "dl")
-      .as[Posting]
-    // spec carries over; stats recomputed post-expunge
-    java.nio.file.Files.createDirectories(Paths.get(outDir))
+    val srcDps = docsPerShardOf(dir)
+    val dps = if (docsPerShard > 0) docsPerShard else srcDps
+    Files.createDirectories(Paths.get(outDir))
+    writeFormat(outDir)
     writeShardSpec(outDir, dps)
-    // spec carries over VERBATIM — byte-level file copies (round 6): the
-    // old read→rewrite through Spark was a whole job to reproduce a
-    // kilobyte file the source dir already holds. The sidecar TSV is the
-    // primary form; a pre-round-6 source additionally carries the spec
-    // parquet, copied as-is so the optimized dir opens under either path.
-    if (Files.exists(specTsvPath(dir))) {
-      Files.createDirectories(specTsvPath(outDir).getParent)
-      Files.copy(specTsvPath(dir), specTsvPath(outDir),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    deleteRecursively(s"$outDir/spec")
-    if (Files.exists(Paths.get(s"$dir/spec"))) {
-      Files.createDirectories(Paths.get(s"$outDir/spec"))
-      scala.util.Using.resource(Files.list(Paths.get(s"$dir/spec")))(_.forEach { p =>
-        if (p.getFileName.toString.endsWith(".parquet"))
-          Files.copy(p, Paths.get(s"$outDir/spec").resolve(p.getFileName))
-      })
-    }
-    if (Files.exists(specDigestPath(dir))) {
-      Files.createDirectories(specDigestPath(outDir).getParent)
-      Files.copy(specDigestPath(dir), specDigestPath(outDir),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    // spec carries over VERBATIM — byte-level file copies of the sidecars
+    Seq(specTsvPath _, specDigestPath _).foreach { pathOf =>
+      Files.createDirectories(pathOf(outDir).getParent)
+      Files.copy(pathOf(dir), pathOf(outDir), java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
     commitStage(outDir, "spec", Map.empty)
     // stored sidecar: expunge tombstoned rows too — a doc-value-only query
     // (no posting conjunction) reads stored directly, so a row surviving
     // its postings would resurrect the deleted doc
     if (Files.exists(Paths.get(s"$dir/stored"))) {
-      readInferred(spark, s"$dir/stored")
-        .join(deletedDocsDF(spark, dir), Seq("docId"), "left_anti")
-        .withColumn("shard", (col("docId") / lit(dps)).cast("int"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/stored")
+      writeTable(
+        readInferred(spark, s"$dir/stored")
+          .join(deletedDocsDF(spark, dir), Seq("docId"), "left_anti")
+          .withColumn("shard", (col("docId") / lit(dps)).cast("int")),
+        SaveMode.Overwrite, s"$outDir/stored")
       commitStage(outDir, "stored", Map.empty)
     }
-    // marker strategy mirrors build's, keyed on the SAME pinned shard spec.
-    // Marker segment rows are stats-only (no blocks) in EVERY index, so the
-    // decode above never recovers marker postings; for dps <= Int.MaxValue
-    // the encode tasks reconstruct them (bitset path), and for a wider
-    // shard spec — where reconstruction's local-offset bitset can't exist
-    // and hardcoding reconstructMarkers = true crashed every optimize on
-    // encodeSegments' require — the (field, doc, dl) markers are
-    // re-synthesized from the decoded postings (dl rides every posting;
-    // distinct is the same shape tokenizePostingsWithMarkers ships at build)
-    val recon = dps <= Int.MaxValue
-    val encodable =
-      if (recon) postings
-      else postings.unionByName(
-        postings.select(col("field"), col("docId"), col("dl")).distinct()
-          .select(col("field"), lit(IndexBuilder.DlMarker).as("term"), col("docId"),
-            col("dl").as("tf"), lit(Array.empty[Int]).as("positions"), col("dl"))
-          .as[Posting])
+    val tombs = tombstoneRows(spark, dir)
+      .select((col("docId") / lit(srcDps)).cast("int").as("shard"), col("docId"))
+      .as[(Int, Long)]
+    val runs = readSegments(spark, s"$dir/segments").as[SegmentRow]
+      .groupByKey(_.shard)
+      .cogroup(tombs.groupByKey(_._1)) { (_, rows, dead) =>
+        val deleted = new scala.collection.mutable.HashSet[Long]
+        dead.foreach(deleted += _._2)
+        decodeShard(rows, deleted.contains, dps)
+      }
     val mkAcc = spark.sparkContext.collectionAccumulator[MarkerStat]("graft.markerstats")
-    encodeSegments(encodable, dps, reconstructMarkers = recon, markerAcc = Some(mkAcc))
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/segments")
+    val encoded =
+      if (dps == srcDps) encodeSorted(runs, None, Some(mkAcc), dps)
+      else encodeRuns(runs, None, Some(mkAcc), dps)
+    writeTable(encoded, SaveMode.Overwrite, s"$outDir/segments")
     commitStage(outDir, "segments", Map.empty)
-    val seg = readSegments(spark, s"$outDir/segments")
-      .select(col("field"), col("term"), col("df"), col("cf"))
-    seg.filter(col("term") =!= IndexBuilder.DlMarker)
-      .groupBy(col("field"), col("term"))
-      .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
-      .as[TermStats]
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/termstats")
+    writeTermStats(readSegments(spark, s"$outDir/segments")
+      .select(col("field"), col("term"), col("df"), col("cf")), s"$outDir/termstats")
     // field stats fold from the encode job's marker accumulator — the
     // optimize runs its encode unconditionally, so no read-back fallback
-    val fsRows = {
-      import scala.jdk.CollectionConverters._
-      foldMarkerStats(mkAcc.value.asScala.toSeq)
-    }
-    writeFieldStatsGens(outDir, Map("base" -> fsRows)) // driver write, no job
+    writeFieldStatsGens(outDir, Map("base" -> foldMarkerStats(mkAcc))) // driver write, no job
     commitStage(outDir, "stats", Map.empty)
+  }
+
+  /** One shard's segment rows → its live postings as mini-runs, ordered by
+    * (field, term, minDoc) — the order [[encodeSorted]] takes. The shard's
+    * dl-marker rows supply each doc's dl (their norms); docs `deleted`
+    * drops are skipped, and a run is cut wherever the docs cross a
+    * `docsPerShard` boundary, so each mini-run lies in one output shard.
+    * Holds the shard's compressed rows in memory; decodes one row at a time.
+    */
+  private def decodeShard(
+      rows: Iterator[SegmentRow],
+      deleted: Long => Boolean,
+      docsPerShard: Long): Iterator[SegmentStore.MiniRun] = {
+    val (markers, terms) = rows.toArray.partition(_.term == IndexBuilder.DlMarker)
+    val norms = markers.groupBy(_.field).map { case (f, ms) =>
+      f -> new Codec.Norms(ms.map(m => (m.minDoc, m.maxDoc, m.norms)).toSeq)
+    }
+    terms.sortBy(r => (r.field, r.term, r.minDoc)).iterator.flatMap { r =>
+      val fieldNorms = norms.getOrElse(r.field, throw new IllegalStateException(
+        s"shard ${r.shard} has postings but no dl-marker row for field ${r.field}"))
+      val out = scala.collection.mutable.ArrayBuffer.empty[SegmentStore.MiniRun]
+      var buf = new RunBuf
+      var shard = -1
+      def flush(): Unit = if (buf.nonEmpty) {
+        val (d, t, l, p) = buf.result()
+        out += ((shard, r.field, r.term, d(0), d, t, l, p))
+        buf = new RunBuf
+      }
+      r.blocks.foreach { b =>
+        val docs = Codec.decodeDocs(b)
+        val poss = Codec.decodePositions(b, docs.tfs)
+        var i = 0
+        while (i < b.count) {
+          val d = docs.docIds(i)
+          if (!deleted(d)) {
+            val s = (d / docsPerShard).toInt
+            if (s != shard) { flush(); shard = s }
+            buf.add(d, docs.tfs(i), fieldNorms.dl(d), poss(i))
+          }
+          i += 1
+        }
+      }
+      flush()
+      out.iterator
+    }
   }
 
   /** `_cleanup` analog (reference LuceneServlet.java:75-118 deletes index
     * directories no longer referenced): optimize into a staging dir, then
     * swap it in and expire every superseded generation file — appended
-    * `termstats`/`fieldstats`/`segments` generations and the tombstone log
-    * all collapse to one fresh generation, so an incrementally-maintained
-    * index stops growing monotonically. A stale staging dir from a crashed
-    * prior attempt is discarded and rebuilt (the swap itself is the
-    * non-atomic window; production maps this to an Iceberg
-    * snapshot-replace commit, see the class note above).
+    * `termstats`/`segments` generations and the tombstone log all collapse
+    * to one fresh generation, so an incrementally-maintained index stops
+    * growing monotonically. A stale staging dir from a crashed prior
+    * attempt is discarded and rebuilt (the swap itself is the non-atomic
+    * window; production maps this to an Iceberg snapshot-replace commit,
+    * see the class note above).
     */
   def optimizeInPlace(spark: SparkSession, dir: String, docsPerShard: Long = -1L): Unit = {
     val dps = if (docsPerShard > 0) docsPerShard else docsPerShardOf(dir)
     val staging = s"$dir/staging-optimize"
     deleteRecursively(staging)
     optimize(spark, dir, staging, dps)
-    val subs = Seq("spec", "termstats", "fieldstats", "segments") ++
+    val subs = Seq("termstats", "segments") ++
       (if (Files.exists(Paths.get(s"$staging/stored"))) Seq("stored") else Nil)
     subs.foreach { sub =>
-      // spec/fieldstats live in the checkpoint sidecars since round 6, so
-      // their staged parquet dirs exist only when the SOURCE was an old
-      // store; the stale live dir is dropped either way (the swapped-in
-      // sidecar is authoritative)
       deleteRecursively(s"$dir/$sub")
-      if (Files.exists(Paths.get(s"$staging/$sub"))) {
-        Files.move(Paths.get(s"$staging/$sub"), Paths.get(s"$dir/$sub"))
-        // `_cleanup` hygiene: drop the Hadoop commit side-files (`_SUCCESS`,
-        // `.crc`) from the swapped-in dirs — generation promotion only ever
-        // moves `*.parquet`, and these markers are per-write artifacts, not
-        // index data; leaving them made the "cleanup shrinks the dir"
-        // observable depend on how many part files the writes happened to emit
-        scala.util.Using.resource(Files.list(Paths.get(s"$dir/$sub")))(_.forEach { p =>
-          val n = p.getFileName.toString
-          if (!n.endsWith(".parquet")) Files.delete(p)
-        })
-      }
+      Files.move(Paths.get(s"$staging/$sub"), Paths.get(s"$dir/$sub"))
+      // `_cleanup` hygiene: drop the Hadoop commit side-files (`_SUCCESS`,
+      // `.crc`) from the swapped-in dirs — generation promotion only ever
+      // moves `*.parquet`, and these markers are per-write artifacts, not
+      // index data; leaving them made the "cleanup shrinks the dir"
+      // observable depend on how many part files the writes happened to emit
+      scala.util.Using.resource(Files.list(Paths.get(s"$dir/$sub")))(_.forEach { p =>
+        val n = p.getFileName.toString
+        if (!n.endsWith(".parquet")) Files.delete(p)
+      })
     }
     // promote the staged metadata sidecars over the live ones
     Seq(specTsvPath _, specDigestPath _, fieldStatsTsvPath _).foreach { pathOf =>
-      if (Files.exists(pathOf(staging))) {
-        Files.createDirectories(pathOf(dir).getParent)
-        Files.move(pathOf(staging), pathOf(dir),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
+      Files.move(pathOf(staging), pathOf(dir), java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
     // compact the upsert key map (if any): drop rows whose docIds the
     // optimize just expunged, BEFORE clearing the tombstone log
@@ -1010,7 +926,7 @@ object SegmentStore {
       val live = readInferred(spark, s"$dir/keys")
         .join(deletedDocsDF(spark, dir), Seq("docId"), "left_anti")
       val compacted = s"$dir/keys-compact"
-      live.write.mode(SaveMode.Overwrite).parquet(compacted)
+      writeTable(live, SaveMode.Overwrite, compacted)
       deleteRecursively(s"$dir/keys")
       Files.move(Paths.get(compacted), Paths.get(s"$dir/keys"))
     }
@@ -1040,6 +956,14 @@ object SegmentStore {
     else scala.util.Using.resource(Files.walk(path))(_.filter(Files.isRegularFile(_)).count())
   }
 
+  /** Total bytes of the regular files under `dir` (0 when absent). */
+  private def diskBytes(dir: String): Long = {
+    val path = Paths.get(dir)
+    if (!Files.exists(path)) 0L
+    else scala.util.Using.resource(Files.walk(path))(
+      _.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum())
+  }
+
   /** Delete-by-docId: tombstone file, honored by [[SegmentSearcher]] and
     * dropped for real by [[optimize]] — the reference's `deleteDocuments` +
     * `_expunge` pair (DatabaseIndexer.java:350-355,266-271).
@@ -1059,18 +983,22 @@ object SegmentStore {
     * tombstones this way; this is the public API for it).
     */
   def deleteDocs(docIds: DataFrame, dir: String): Unit =
-    docIds.select(col("docId").cast("long").as("docId"))
-      .write.mode(SaveMode.Append).parquet(s"$dir/tombstones")
+    writeTable(docIds.select(col("docId").cast("long").as("docId")), SaveMode.Append,
+      s"$dir/tombstones")
 
-  /** Tombstoned docIds as a (distinct) DataFrame — the scale-safe shape:
-    * the query path co-groups these with segment rows per shard, and
-    * [[optimize]] anti-joins them; nothing is collected to the driver.
-    */
-  def deletedDocsDF(spark: SparkSession, dir: String): DataFrame = {
+  /** The tombstone log as written: a docId deleted twice appears twice. */
+  private def tombstoneRows(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     if (!Files.exists(Paths.get(s"$dir/tombstones"))) spark.emptyDataset[Long].toDF("docId")
-    else spark.read.schema("docId BIGINT").parquet(s"$dir/tombstones").distinct()
+    else spark.read.schema("docId BIGINT").parquet(s"$dir/tombstones")
   }
+
+  /** Tombstoned docIds as a (distinct) DataFrame — the scale-safe shape:
+    * the query path and [[optimize]] co-group these with segment rows per
+    * shard; nothing is collected to the driver.
+    */
+  def deletedDocsDF(spark: SparkSession, dir: String): DataFrame =
+    tombstoneRows(spark, dir).distinct()
 
   /** Driver-side tombstone set — bounded uses only (tests, info counts). */
   def deletedDocs(spark: SparkSession, dir: String): Set[Long] = {
@@ -1079,24 +1007,40 @@ object SegmentStore {
   }
 
   /** Index info — the reference's `GET .../{view}` stats endpoint analog
-    * (DatabaseIndexer.java:386-430): doc/term/byte counts and field list.
+    * (DatabaseIndexer.java:386-430): doc/term/byte counts and field list,
+    * plus where the bytes are:
+    *  - `table_bytes`: on-disk bytes of each table (segments, stored,
+    *    termstats, keys, tombstones);
+    *  - `field_bytes`: per field, the encoded bytes of its posting blocks
+    *    (`postings`) and of its norms (`norms`);
+    *  - `generations` (appended field-stats generations since the last
+    *    build or optimize) and `tombstone_ratio` (deleted / doc_count).
     */
   def info(spark: SparkSession, dir: String): Map[String, Any] = {
     val idx = openMerged(spark, dir)
-    val seg = idx.segments
-    // ONE action for all the distributed counts: the segment-metadata agg
-    // and the tombstone count cross-joined into a single row (each side is a
-    // 1-row aggregate), instead of two separately-scheduled jobs per call
+    // ONE action for all the distributed counts: the per-field
+    // segment-metadata agg with the 1-row tombstone count cross-joined in
     val tomb = deletedDocsDF(spark, dir).agg(count(lit(1)).as("del"))
-    val m = seg.agg(count(lit(1)), sum(col("bytes")), countDistinct(col("shard")))
-      .crossJoin(tomb).head()
+    val isMarker = col("term") === IndexBuilder.DlMarker
+    val perField = idx.segments.groupBy(col("field"))
+      .agg(count(lit(1)), sum(when(isMarker, 0L).otherwise(col("bytes"))),
+        sum(when(isMarker, col("bytes")).otherwise(0L)), collect_set(col("shard")))
+      .crossJoin(tomb).collect()
+    val docCount = idx.fieldStats.values.map(_.docCount).max
+    val deleted = perField.headOption.map(_.getLong(5)).getOrElse(0L)
     Map(
-      "doc_count" -> idx.fieldStats.values.map(_.docCount).max,
+      "doc_count" -> docCount,
       "fields" -> idx.fields.map(_.indexField),
-      "segment_rows" -> m.getLong(0),
-      "disk_bytes" -> m.getLong(1),
-      "shards" -> m.getLong(2),
-      "deleted_count" -> m.getLong(3))
+      "segment_rows" -> perField.map(_.getLong(1)).sum,
+      "disk_bytes" -> perField.map(r => r.getLong(2) + r.getLong(3)).sum,
+      "shards" -> perField.flatMap(_.getSeq[Int](4)).distinct.length.toLong,
+      "deleted_count" -> deleted,
+      "tombstone_ratio" -> (if (docCount == 0) 0.0 else deleted.toDouble / docCount),
+      "generations" -> readFieldStatsGens(dir).map(_.size).getOrElse(0),
+      "table_bytes" -> Seq("segments", "stored", "termstats", "keys", "tombstones")
+        .map(t => t -> diskBytes(s"$dir/$t")).toMap,
+      "field_bytes" -> perField.map(r =>
+        r.getString(0) -> Map("postings" -> r.getLong(2), "norms" -> r.getLong(3))).toMap)
   }
 
   /** Canonical analyzer name persisted in the spec; must round-trip through
@@ -1116,22 +1060,22 @@ object SegmentStore {
       s"analyzer $other has no persistable name — add it to SegmentStore.analyzerName/Analyzers.byName")
   }
 
-  /** Read a fieldstats dir tolerantly: generations written before `sumDl`
-    * entered the schema (round 5) lack the column — reconstruct their Σdl
-    * per ROW as round(docCount·avgdl), the exact inverse of how that
-    * generation's avgdl was computed. Without this, open() crashes on a
-    * pre-upgrade store, and worse, openMerged on a MIXED store (old + new
-    * generations under mergeSchema) would sum nulls as zero and fold a
-    * silently deflated avgdl into BM25.
-    */
-  private val FieldStatsSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "field STRING, docCount BIGINT, avgdl DOUBLE, sumDl BIGINT")
-
   // schemas pinned from the writer-side encoders (round 6): every
   // `spark.read.parquet` without a schema runs a footer-inference job —
   // opens and maintenance ops paid one per table read
   private val SegmentRowSchema = org.apache.spark.sql.Encoders.product[SegmentRow].schema
   private val TermStatsSchema = org.apache.spark.sql.Encoders.product[TermStats].schema
+
+  /** Per-(field, term) df/cf folded from segment-row metadata (`seg` holds
+    * field, term, df, cf), dl-marker rows excluded — sums of longs, so the
+    * totals are bit-identical to a direct postings aggregation.
+    */
+  private[graft] def writeTermStats(seg: DataFrame, path: String): Unit =
+    writeTable(
+      seg.filter(col("term") =!= IndexBuilder.DlMarker)
+        .groupBy(col("field"), col("term"))
+        .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf")),
+      SaveMode.Overwrite, path)
 
   /** Segments read with the pinned schema (no inference job). */
   private[graft] def readSegments(spark: SparkSession, path: String): DataFrame =
@@ -1155,15 +1099,6 @@ object SegmentStore {
     spark.read.schema(
       inferredSchemaCache.getOrElseUpdate(path, spark.read.parquet(path).schema)).parquet(path)
 
-  private def readFieldStats(spark: SparkSession, path: String): org.apache.spark.sql.DataFrame = {
-    // explicit schema (round 6): the old mergeSchema read ran a distributed
-    // footer-merge job per open; pinning the schema reads pre-sumDl
-    // generation files as null sumDl, which the same coalesce reconstructs
-    val raw = spark.read.schema(FieldStatsSchema).parquet(path)
-    raw.select(col("field"), col("docCount"), col("avgdl"),
-      coalesce(col("sumDl"), round(col("docCount") * col("avgdl")).cast("long")).as("sumDl"))
-  }
-
   def open(spark: SparkSession, dir: String): SegmentIndex = openRaw(spark, dir)._1
 
   /** [[open]] plus the raw per-generation fieldstats rows — so
@@ -1171,14 +1106,11 @@ object SegmentStore {
     */
   private def openRaw(spark: SparkSession, dir: String): (SegmentIndex, Seq[FieldStats]) = {
     import spark.implicits._
-    // boost entered the spec in round 2 — a round-1 (4-column) dir still
-    // opens, defaulting boost to 1.0 (ADVICE r2: no opaque encoder error)
-    val fields = open0Fields(spark, dir)
-    // sidecar first (driver read, no job); parquet fallback for old dirs
-    val fsRows = readFieldStatsGens(dir) match {
-      case Some(gens) => gens.toSeq.sortBy(_._1).flatMap(_._2)
-      case None => readFieldStats(spark, s"$dir/fieldstats").as[FieldStats].collect().toSeq
-    }
+    requireFormat(dir)
+    val fields = readFields(dir)
+    val fsRows = readFieldStatsGens(dir).getOrElse(throw new IllegalStateException(
+      s"$dir has no checkpoints/fieldstats.tsv: its build never committed the stats stage"))
+      .toSeq.sortBy(_._1).flatMap(_._2)
     val stored =
       if (Files.exists(Paths.get(s"$dir/stored"))) Some(readInferred(spark, s"$dir/stored"))
       else None

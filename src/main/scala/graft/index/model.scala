@@ -11,10 +11,12 @@ import graft.analysis.Analyzer
   *
   *  - `tf`        term frequency within (docId, field)
   *  - `positions` pre-stop-filter token positions, sorted asc (phrase queries)
-  *  - `dl`        token count of (docId, field) after analysis — denormalized
-  *                into the posting so BM25 scoring is join-free at query time
-  *                (Lucene stores this as the per-doc norm; we keep the exact
-  *                int instead of Lucene's lossy 1-byte encoding, SURVEY.md §2.7)
+  *  - `dl`        token count of (docId, field) after analysis, carried on
+  *                the row-level posting (the Catalyst path scores from it).
+  *                The segment store keeps it once per (shard, field) as the
+  *                dense norms of the dl-marker row, like Lucene's per-doc
+  *                norm but the exact int instead of Lucene's lossy 1-byte
+  *                encoding (SURVEY.md §2.7)
   */
 final case class Posting(
     field: String,

@@ -35,21 +35,19 @@ object Curate {
       k: Int = 50,
       fractions: Seq[(String, Double)] = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
       salt: String = "graft",
-      broadcastBad: Boolean = true): DataFrame = {
+      broadcastBad: Option[Boolean] = None): DataFrame = {
     val norm = docs.select(col(idCol).cast("long").as("doc_id"),
       col(textCol).as("text"), col(groupCol))
     val corpus = norm.filter(col("doc_id") % benchMod =!= 0)
     val bench = norm.filter(col("doc_id") % benchMod === 0)
     // the CONTAMINATED id set is bounded by the benchmark's blast radius —
-    // broadcast anti-join it away by default (joining the corpus-sized
-    // SURVIVOR set back instead would be a corpus x corpus shuffle);
-    // `broadcastBad = false` lets the anti-join shuffle when a phrasing-
-    // heavy benchmark blows the blast radius past broadcast limits (see
-    // Decontam.decontaminate)
+    // anti-join it away (joining the corpus-sized SURVIVOR set back instead
+    // would be a corpus x corpus shuffle), broadcast when its measured size
+    // fits (see Decontam.decontaminate)
     val bad = Decontam.contaminationHits(
         corpus, "doc_id", "text", bench, "doc_id", "text", minHits = minHits)
       .filter(col("contaminated")).select(col("doc_id"))
-    val kept = corpus.join(if (broadcastBad) broadcast(bad) else bad, Seq("doc_id"), "left_anti")
+    val kept = corpus.join(Broadcast.side(bad, broadcastBad), Seq("doc_id"), "left_anti")
     // exact dedup, [[Dedup.exact]]'s min-id-canonical rule, re-expressed as
     // ONE content-digest window exchange (groupBy + join-back would shuffle
     // the corpus twice); a degenerate duplicate mega-cluster sorts in one

@@ -64,16 +64,14 @@ object Decontam {
     * overlaps, as an anti-join against the contaminated id set. Emits
     * surviving doc ids (join back to the source for full rows).
     *
-    * `broadcastBad` (round 6, mirroring `TextAnalysis.tokenFrequency`'s
-    * `broadcastVocab`): the contaminated id set is bounded by the
-    * benchmark's blast radius, which for a clean eval suite is tiny — the
-    * default force-broadcasts it so the corpus side never shuffles. But
-    * hits are counted on ≥ `minHits` shared shingles, and a benchmark
-    * containing common phrasing can contaminate 0.1–1% of a web corpus —
-    * 10⁸⁺ ids at 10¹¹ docs, past any driver/broadcast limit, and a hard
-    * `broadcast()` hint is one AQE cannot demote. Pass false there: the
-    * anti-join shuffles (AQE picks the strategy), trading one corpus-side
-    * exchange for driver safety.
+    * `broadcastBad`: the contaminated id set is bounded by the benchmark's
+    * blast radius, which for a clean eval suite is tiny — broadcast, the
+    * corpus side never shuffles. But a benchmark containing common phrasing
+    * can contaminate 0.1–1% of a web corpus, 10⁸⁺ ids at 10¹¹ docs, past
+    * any driver/broadcast limit. By default (None) the id set is counted
+    * once and broadcast iff its measured size fits
+    * `spark.sql.autoBroadcastJoinThreshold` ([[Broadcast.side]]); an
+    * explicit value overrides.
     */
   def decontaminate(
       docs: DataFrame,
@@ -84,10 +82,10 @@ object Decontam {
       benchTextCol: String,
       w: Int = 3,
       minHits: Int = 2,
-      broadcastBad: Boolean = true): DataFrame = {
+      broadcastBad: Option[Boolean] = None): DataFrame = {
     val bad = contaminationHits(docs, idCol, textCol, bench, benchIdCol, benchTextCol, w, minHits)
       .filter(col("contaminated")).select(col("doc_id"))
     docs.select(col(idCol).cast("long").as("doc_id"))
-      .join(if (broadcastBad) broadcast(bad) else bad, Seq("doc_id"), "left_anti")
+      .join(Broadcast.side(bad, broadcastBad), Seq("doc_id"), "left_anti")
   }
 }

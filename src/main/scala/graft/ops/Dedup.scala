@@ -60,6 +60,10 @@ object Dedup {
     * the same way but paid two exchanges (guide §2.4: share the exchange) —
     * the unbounded-frame window min is the identical per-row canonical id
     * off the single digest shuffle.
+    *
+    * Null text has a null digest, and the window partitions nulls together:
+    * all null-text rows form ONE group (canonical = their min id); `""` is
+    * ordinary content, one group of its own.
     */
   def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val hashed = docs.select(col(idCol).cast("long").as("doc_id"), md5(col(textCol)).as("content_md5"))

@@ -146,9 +146,11 @@ object TextAnalysis {
     * only shuffle. Mean df is an exact integer rational (floor-rounded).
     *
     * `broadcastVocab`: a curated-corpus vocabulary is Zipf-small and should
-    * broadcast (default); a raw web crawl's typo-ridden vocabulary can reach
-    * 10⁸⁻⁹ terms — pass false there to let the term join shuffle (AQE picks
-    * the strategy), trading one exchange for driver safety.
+    * broadcast; a raw web crawl's typo-ridden vocabulary can reach 10⁸⁻⁹
+    * terms and must shuffle. By default (None) the vocabulary is counted
+    * once and broadcast iff its measured size fits
+    * `spark.sql.autoBroadcastJoinThreshold` ([[Broadcast.side]]); an
+    * explicit value overrides.
     *
     * PRECONDITION (shared with the whole file — see Dedup's header): one
     * row per doc_id. The vocab df counts one hit per input ROW's distinct
@@ -156,11 +158,11 @@ object TextAnalysis {
     * documented per-DOCUMENT frequency (ADVICE r5).
     */
   def tokenFrequency(docs: DataFrame, idCol: String, textCol: String,
-      broadcastVocab: Boolean = true): DataFrame = {
+      broadcastVocab: Option[Boolean] = None): DataFrame = {
     val vocab = docs.select(explode(array_distinct(rawTokens(col(textCol)))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("df"))
     docs.select(col(idCol).cast("long").as("doc_id"), explode(rawTokens(col(textCol))).as("term"))
-      .join(if (broadcastVocab) broadcast(vocab) else vocab, Seq("term"))
+      .join(Broadcast.side(vocab, broadcastVocab), Seq("term"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).cast("double").as("n"), sum(col("df")).cast("double").as("sdf"))
       .select(col("doc_id"),

@@ -74,10 +74,10 @@ object IncrementalIndexer {
       fields: Seq[FieldDef],
       docsPerShard: Long = 1L << 14,
       storedColumns: Seq[String] = Nil): Unit = {
+    SegmentStore.initFormat(dir)
     val meta = readMeta(dir)
     if (batchId <= meta.lastBatch) return // replayed batch — already committed
     val spark = batch.sparkSession
-    import spark.implicits._
     if (!SegmentStore.stageDone(dir, "spec")) {
       SegmentStore.writeSpec(spark, dir, fields)
     }
@@ -114,23 +114,13 @@ object IncrementalIndexer {
       // use block-local encAvgdl — the scorers' max(1, q/encAvgdl)
       // inflation (Codec.Block.encAvgdl) is what keeps WAND sound when the
       // merged multi-generation avgdl differs from any encode-time value.
-      val recon = dps <= Int.MaxValue
-      // field stats fold from the encode job's marker accumulator (round 6)
-      // — the old shape re-read the staged segments for a second metadata
-      // aggregation + collect per micro-batch
+      // Field stats fold from the encode job's marker accumulator.
       val mkAcc = spark.sparkContext.collectionAccumulator[graft.index.MarkerStat]("graft.markerstats")
-      // recon path: fused tokenize→mini-run pass (IndexBuilder.tokenizeMiniRuns)
-      val encoded =
-        if (recon)
-          SegmentStore.encodeRuns(
-            IndexBuilder.tokenizeMiniRuns(withIds, "docId", fields, dps),
-            None, reconstructMarkers = true, Some(mkAcc), dps)
-        else
-          SegmentStore.encodeSegments(
-            IndexBuilder.tokenizePostingsWithMarkers(withIds, "docId", fields),
-            dps, reconstructMarkers = false, markerAcc = Some(mkAcc))
-      encoded.write.mode(SaveMode.Overwrite).parquet(s"$staging/segments")
-      val fsRows = SegmentStore.foldMarkerStatsPublic(mkAcc)
+      SegmentStore.writeTable(
+        SegmentStore.encodeRuns(IndexBuilder.tokenizeMiniRuns(withIds, "docId", fields, dps),
+          None, Some(mkAcc), dps),
+        SaveMode.Overwrite, s"$staging/segments")
+      val fsRows = SegmentStore.foldMarkerStats(mkAcc)
       // The three remaining staged writes are INDEPENDENT of each other
       // (termstats reads the just-encoded segments; keys/stored read the
       // persisted batch), so they run as concurrent jobs from a small driver
@@ -144,27 +134,23 @@ object IncrementalIndexer {
       try {
         val writes = Seq(
           scala.concurrent.Future {
-            val seg = SegmentStore.readSegments(spark, s"$staging/segments")
-              .select(col("field"), col("term"), col("df"), col("cf"))
-            seg.filter(col("term") =!= IndexBuilder.DlMarker)
-              .groupBy(col("field"), col("term"))
-              .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
-              .as[TermStats]
-              .write.mode(SaveMode.Overwrite).parquet(s"$staging/termstats")
+            SegmentStore.writeTermStats(SegmentStore.readSegments(spark, s"$staging/segments")
+              .select(col("field"), col("term"), col("df"), col("cf")), s"$staging/termstats")
           },
           // key→docId map rides along as its own generation: the MERGE/upsert
           // path joins incoming keys against it to find superseded docIds
           scala.concurrent.Future {
-            withIds.select((orderCols.map(org.apache.spark.sql.functions.col) :+ col("docId")): _*)
-              .write.mode(SaveMode.Overwrite).parquet(s"$staging/keys")
+            SegmentStore.writeTable(withIds.select((orderCols.map(col) :+ col("docId")): _*),
+              SaveMode.Overwrite, s"$staging/keys")
           }) ++
           // stored/doc-values sidecar generation (round 4): docIds are
           // append-only, so generations union cleanly at open — doc-value and
           // envelope queries work on an incrementally-maintained index too
           (if (storedColumns.isEmpty) Nil else Seq(scala.concurrent.Future {
-            withIds.select(col("docId").cast("long").as("docId") +: storedColumns.map(col): _*)
-              .withColumn("shard", (col("docId") / lit(dps)).cast("int"))
-              .write.mode(SaveMode.Overwrite).parquet(s"$staging/stored")
+            SegmentStore.writeTable(
+              withIds.select(col("docId").cast("long").as("docId") +: storedColumns.map(col): _*)
+                .withColumn("shard", (col("docId") / lit(dps)).cast("int")),
+              SaveMode.Overwrite, s"$staging/stored")
           }))
         // join EVERY write before rethrowing the first failure: no staged
         // write may still be running into the staging dir when the caller
@@ -178,12 +164,10 @@ object IncrementalIndexer {
       subs.foreach { sub =>
         promoteGeneration(s"$staging/$sub", s"$dir/$sub", s"gen$batchId")
       }
-      // this generation's field stats land in the driver-side sidecar
-      // (round 6 — the old per-batch coalesce(1) parquet write + promote was
-      // a whole Spark job per micro-batch for #fields rows). Idempotent per
-      // gen key, and still BEFORE writeMeta: a crash window replays the
-      // batch, which overwrites the same key with identical rows.
-      SegmentStore.updateFieldStatsGen(spark, dir, s"gen$batchId", fsRows)
+      // this generation's field stats land in the driver-side sidecar.
+      // Idempotent per gen key, and BEFORE writeMeta: a crash window replays
+      // the batch, which overwrites the same key with identical rows.
+      SegmentStore.updateFieldStatsGen(dir, s"gen$batchId", fsRows)
       SegmentStore.deleteRecursively(staging)
     }
     withIds.unpersist(blocking = false)
@@ -226,6 +210,7 @@ object IncrementalIndexer {
       fields: Seq[FieldDef],
       docsPerShard: Long = 1L << 14,
       storedColumns: Seq[String] = Nil): Unit = {
+    SegmentStore.initFormat(dir)
     val meta = readMeta(dir)
     if (batchId <= meta.lastBatch) return
     val spark = batch.sparkSession
@@ -239,7 +224,7 @@ object IncrementalIndexer {
       val stale = spark.read.schema(keySchema).parquet(s"$dir/keys")
         .join(batch.select(keyCols.map(col): _*).distinct(), keyCols, "left_semi")
         .select(col("docId"))
-      stale.write.mode(SaveMode.Append).parquet(s"$dir/tombstones")
+      SegmentStore.writeTable(stale, SaveMode.Append, s"$dir/tombstones")
     }
     appendBatch(batch, batchId, dir, keyCols, fields, docsPerShard, storedColumns)
   }
@@ -279,7 +264,7 @@ object IncrementalIndexer {
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       fields: Seq[FieldDef]): Boolean = {
-    val changed = SegmentStore.specChanged(spark, dir, fields)
+    val changed = SegmentStore.specChanged(dir, fields)
     if (changed) SegmentStore.deleteRecursively(dir)
     changed
   }
@@ -316,7 +301,7 @@ object IncrementalIndexer {
       .trigger(trigger)
       .option("checkpointLocation", s"$dir/checkpoints/stream")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (SegmentStore.persistedSpecDigest(spark, dir).exists(_ != startedDigest))
+        if (SegmentStore.persistedSpecDigest(dir).exists(_ != startedDigest))
           throw new SpecChangedException(dir)
         appendBatch(batch, batchId, dir, orderCols, fields, storedColumns = storedColumns)
       }

@@ -89,7 +89,7 @@ class DecontamSpec extends SparkSpec {
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     def clean(bc: Boolean) = Decontam.decontaminate(
       d.filter(col("doc_id") % 17 =!= 0), "doc_id", "text",
-      d.filter(col("doc_id") % 17 === 0), "doc_id", "text", broadcastBad = bc)
+      d.filter(col("doc_id") % 17 === 0), "doc_id", "text", broadcastBad = Some(bc))
     // default: the contaminated-id set is force-broadcast — the corpus side
     // of the anti-join never shuffles
     val bPlan = clean(true).queryExecution.executedPlan.toString
@@ -106,6 +106,37 @@ class DecontamSpec extends SparkSpec {
     // same survivors either way
     assert(clean(true).collect().map(_.getLong(0)).sorted.toSeq ==
       optOut.collect().map(_.getLong(0)).sorted.toSeq)
+  }
+
+  test("decontaminate by default broadcasts the contaminated ids iff their measured size fits") {
+    val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    def clean(bc: Option[Boolean]) = Decontam.decontaminate(
+      d.filter(col("doc_id") % 17 =!= 0), "doc_id", "text",
+      d.filter(col("doc_id") % 17 === 0), "doc_id", "text", broadcastBad = bc)
+    def antiJoin(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.executedPlan.toString.linesIterator
+        .find(l => l.contains("LeftAnti")).getOrElse("")
+    val auto = clean(None)
+    val want = auto.collect().map(_.getLong(0)).sorted.toSeq
+    // a few contaminated ids: far under the default 10 MB threshold
+    assert(antiJoin(auto).contains("BroadcastHashJoin"), antiJoin(auto))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    try {
+      // a threshold under the measured size (8 bytes per contaminated id): shuffled
+      assert(want.length < d.filter(col("doc_id") % 17 =!= 0).count(), "no contaminated ids")
+      spark.conf.set(key, "1")
+      val over = clean(None)
+      assert(antiJoin(over).contains("SortMergeJoin"), antiJoin(over))
+      assert(over.collect().map(_.getLong(0)).sorted.toSeq === want)
+      // an explicit value still overrides the measurement
+      assert(antiJoin(clean(Some(true))).contains("BroadcastHashJoin"))
+      spark.conf.set(key, "-1")
+      assert(antiJoin(clean(None)).contains("SortMergeJoin"))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("benchmark side joins broadcast: no shuffle of corpus shingles into a sort-merge join") {

@@ -62,4 +62,15 @@ class HygieneSpec extends SparkSpec {
     assert(s.topK("gamma").map(_._1) === Seq(1L))
     assert(s.topK("alpha").map(_._1) === Seq(0L))
   }
+
+  test("Dedup.exact: null-text rows form one group; empty text is a group of its own") {
+    import spark.implicits._
+    val docs = Seq[(Long, String)]((5L, null), (2L, ""), (3L, null), (7L, "x"), (4L, ""),
+      (1L, null), (6L, "x")).toDF("doc_id", "text")
+    val got = graft.ops.Dedup.exact(docs, "doc_id", "text").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sortBy(_._1).toSeq
+    assert(got === Seq(
+      (1L, 1L, false), (2L, 2L, false), (3L, 1L, true), (4L, 2L, true),
+      (5L, 1L, true), (6L, 6L, false), (7L, 6L, true)))
+  }
 }

@@ -242,17 +242,23 @@ class SegmentSpec extends SparkSpec {
     val dps = 257L
     def key(r: SegmentRow) = (r.shard, r.field, r.term, r.minDoc)
     def canon(rows: Seq[SegmentRow]) = rows.sortBy(key).map(r =>
-      (r.shard, r.field, r.term, r.df, r.cf, r.minDoc, r.maxDoc, r.bytes,
+      (r.shard, r.field, r.term, r.df, r.cf, r.minDoc, r.maxDoc, r.bytes, r.norms.toSeq,
         r.blocks.map(b => (b.firstDoc, b.lastDoc, b.count, b.maxTf, b.maxTfNorm, b.encAvgdl,
-          b.minPos, b.maxPos,
-          b.docBytes.toSeq, b.tfBytes.toSeq, b.dlBytes.toSeq, b.posBytes.toSeq))))
+          b.minPos, b.maxPos, b.docBytes.toSeq, b.tfBytes.toSeq, b.posBytes.toSeq))))
     val fused = SegmentStore.encodeRuns(
-      IndexBuilder.tokenizeMiniRuns(aug, "docId", f2, dps),
-      None, reconstructMarkers = true, None, dps).collect().toSeq
-    val streamed = SegmentStore.encodeSegments(
-      IndexBuilder.tokenizePostings(aug, "docId", f2), dps,
-      reconstructMarkers = true).collect().toSeq
+      IndexBuilder.tokenizeMiniRuns(aug, "docId", f2, dps), None, None, dps).collect().toSeq
+    // per-posting reference: every posting of a (shard, field, term) in ONE
+    // docId-ordered run, built on the driver from the posting stream
+    val reference = IndexBuilder.tokenizePostings(aug, "docId", f2).collect().toSeq
+      .groupBy(p => ((p.docId / dps).toInt, p.field, p.term)).toSeq
+      .map { case ((shard, field, term), ps) =>
+        val run = ps.sortBy(_.docId)
+        (shard, field, term, run.head.docId, run.map(_.docId).toArray, run.map(_.tf).toArray,
+          run.map(_.dl).toArray, run.map(_.positions).toArray)
+      }
+    val streamed = SegmentStore.encodeRuns(reference.toDS(), None, None, dps).collect().toSeq
     assert(canon(fused) === canon(streamed))
+    assert(fused.exists(_.norms.nonEmpty))
     aug.unpersist()
   }
 }

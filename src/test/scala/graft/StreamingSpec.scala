@@ -55,48 +55,43 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("optimize of a wide-shard index (docsPerShard > Int.MaxValue) re-synthesizes markers") {
+  test("a shard holds at most Int.MaxValue docs: 2^31 docs per shard is rejected") {
+    // norms are dense arrays indexed by a doc's offset within its shard
     val dir = Files.createTempDirectory("graft-wide").toString
-    val out = Files.createTempDirectory("graft-wide-opt").toString
-    val all = DocIds.assign(turnsDF(0, 80), Seq("conv_id", "turn_idx"), "docId", 8)
-    SegmentStore.build(all, "docId", fields, dir, docsPerShard = 5000000000L)
-    SegmentStore.optimize(spark, dir, out)
-    val opt = SegmentStore.open(spark, out).cached()
-    // stats survived the round-trip (the old hardcoded reconstructMarkers
-    // crashed here; a naive recon=false would emit an index with NO stats)
-    batchIndex.fieldStats.foreach { case (f, ref) =>
-      val fs = opt.fieldStats(f)
-      assert(fs.docCount == ref.docCount && math.abs(fs.avgdl - ref.avgdl) < 1e-9, s"stats differ for $f")
+    Seq[() => Unit](
+      () => SegmentStore.writeShardSpec(dir, 1L << 31),
+      () => IncrementalIndexer.appendBatch(turnsDF(0, 10), 0L, dir, Seq("conv_id", "turn_idx"),
+        fields, 1L << 31)).foreach { write =>
+      val e = intercept[IllegalArgumentException](write())
+      assert(e.getMessage.contains("docsPerShard"), e.getMessage)
     }
-    queries.foreach { q =>
-      val a = topK(opt, q)
-      val b = topK(batchIndex, q)
-      assert(a.map(_._1) === b.map(_._1), s"docIds differ for q=$q")
-      a.zip(b).foreach { case ((_, x), (_, y)) => assert(math.abs(x - y) <= 1e-9) }
-    }
+    assert(!SegmentStore.hasShardSpec(dir))
+    SegmentStore.writeShardSpec(dir, Int.MaxValue.toLong)
+    assert(SegmentStore.docsPerShardOf(dir) === Int.MaxValue.toLong)
   }
 
-  test("pre-sumDl fieldstats generations still open and fold exactly (round-5 schema compat)") {
-    val dir = Files.createTempDirectory("graft-legacy-fs").toString
-    IncrementalIndexer.appendBatch(turnsDF(0, 40), 0L, dir, Seq("conv_id", "turn_idx"), fields, 257)
-    // rewrite generation 0's fieldstats as a PARQUET table WITHOUT sumDl —
-    // a store written before the column entered the schema (round 5), which
-    // also predates the round-6 fieldstats sidecar: delete the sidecar too,
-    // so the open exercises the legacy parquet path end-to-end
-    val gen0 = SegmentStore.open(spark, dir).fieldStats.values.toSeq
-      .map(fs => (fs.field, fs.docCount, fs.avgdl))
-    SegmentStore.deleteRecursively(s"$dir/fieldstats")
-    Files.deleteIfExists(SegmentStore.fieldStatsTsvPath(dir))
-    spark.createDataFrame(gen0).toDF("field", "docCount", "avgdl")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/fieldstats")
-    // a post-upgrade generation lands next to it (mixed-schema store)
-    IncrementalIndexer.appendBatch(turnsDF(40, 80), 1L, dir, Seq("conv_id", "turn_idx"), fields, 257)
-    val merged = SegmentStore.openMerged(spark, dir)
-    merged.fieldStats.foreach { case (f, fs) =>
-      val ref = batchIndex.fieldStats(f)
-      assert(fs.docCount == ref.docCount, s"docCount differs for $f")
-      assert(math.abs(fs.avgdl - ref.avgdl) < 1e-9, s"avgdl differs for $f: ${fs.avgdl} vs ${ref.avgdl}")
+  test("an index dir in another format fails fast at open, openMerged, appendBatch and optimize") {
+    val dir = Files.createTempDirectory("graft-format").toString
+    IncrementalIndexer.appendBatch(turnsDF(0, 20), 0L, dir, Seq("conv_id", "turn_idx"), fields, 257)
+    val format = java.nio.file.Paths.get(s"$dir/checkpoints/format.json")
+    val out = Files.createTempDirectory("graft-format-opt").toString
+    // no format file (every earlier layout), then a different version
+    Seq[(() => Unit, String)](
+      (() => Files.deleteIfExists(format), "1"),
+      (() => Files.writeString(format, """{"format": 99}"""), "99")).foreach { case (stamp, found) =>
+      stamp()
+      Seq[() => Any](
+        () => SegmentStore.open(spark, dir),
+        () => SegmentStore.openMerged(spark, dir),
+        () => IncrementalIndexer.appendBatch(turnsDF(20, 30), 1L, dir, Seq("conv_id", "turn_idx"),
+          fields, 257),
+        () => SegmentStore.optimize(spark, dir, out)).foreach { op =>
+        val e = intercept[IllegalStateException](op())
+        assert(e.getMessage.contains(s"index format $found") &&
+          e.getMessage.contains(s"format ${SegmentStore.FormatVersion}"), e.getMessage)
+      }
     }
+    assert(IncrementalIndexer.readMeta(dir).lastBatch === 0L) // nothing appended
   }
 
   test("a later batch passing a different docsPerShard cannot re-shard the index (round 5)") {

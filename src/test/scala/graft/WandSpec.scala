@@ -3,8 +3,7 @@ package graft
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.index.{Codec, IndexBuilder}
-import graft.index.Codec.Decoded
+import graft.index.IndexBuilder
 import graft.index.Scorers._
 
 /** WAND ≡ exhaustive scoring on random corpora (SURVEY.md §5.2 item 4;
@@ -35,7 +34,7 @@ class WandSpec extends AnyFunSuite with GenSamples {
 
   private def scorers(corpus: Seq[(Double, Vector[Decoded])]): IndexedSeq[TermScorer] =
     corpus.map { case (idf, run) =>
-      new TermScorer(new TermIterator(Codec.encode(run.iterator, avgdl)), idf).withAvgdl(avgdl)
+      new TermScorer(iterOf(run, avgdl), idf).withAvgdl(avgdl)
     }.toIndexedSeq
 
   private def bruteForce(corpus: Seq[(Double, Vector[Decoded])], k: Int): Seq[(Long, Double)] = {
@@ -65,7 +64,7 @@ class WandSpec extends AnyFunSuite with GenSamples {
     // both above and below every block's local reference point
     forAll(corpusGen, Gen.zip(Gen.oneOf(1, 3, 10, 50), Gen.choose(5.0, 120.0))) { case (corpus, (k, liveAvgdl)) =>
       val localScorers = corpus.map { case (idf, run) =>
-        new TermScorer(new TermIterator(Codec.encodeLocal(run.iterator)), idf).withAvgdl(liveAvgdl)
+        new TermScorer(new TermIterator(Decoded.encodeLocal(run), normsOf(run)), idf).withAvgdl(liveAvgdl)
       }.toIndexedSeq
       val wand = wandTopK(localScorers, k)
       val byDoc = scala.collection.mutable.Map[Long, Double]().withDefaultValue(0.0)
@@ -96,7 +95,7 @@ class WandSpec extends AnyFunSuite with GenSamples {
   test("MAXSCORE ≡ exhaustive on mixed term+phrase disjunctions") {
     def phraseOf(c: Seq[(Double, Vector[Decoded])]): PhraseScorer =
       new PhraseScorer(c.take(2).map { case (_, run) =>
-        new TermIterator(Codec.encode(run.iterator, avgdl))
+        iterOf(run, avgdl)
       }.toIndexedSeq, 1, 3.0, avgdl)
     forAll(Gen.zip(corpusGen, corpusGen), Gen.oneOf(1, 5, 10)) { case ((c1, c2), k) =>
       whenever(c2.length >= 2) {
@@ -132,7 +131,7 @@ class WandSpec extends AnyFunSuite with GenSamples {
           val targets = Seq(run.head.docId, run(run.length / 2).docId,
             run.last.docId, run.last.docId + 1)
           targets.foreach { t =>
-            val it = new TermIterator(Codec.encode(run.iterator, avgdl))
+            val it = iterOf(run, avgdl)
             it.advance(t)
             val expected = run.find(_.docId >= t).map(_.docId)
             assert((if (it.doc == NoMoreDocs) None else Some(it.doc)) === expected)
@@ -151,10 +150,10 @@ class WandSpec extends AnyFunSuite with GenSamples {
     val hotA = (0L until 1000000L by 2L).map(d => Decoded(d, 1, 30, Array(0))).toVector
     val hotB = (0L until 1000000L by 2L).map(d => Decoded(d, 1, 30, Array(1))).toVector
     val rare = Vector(1L, 3L, 5L, 7L, 9L).map(d => Decoded(d, 5, 30, Array(0, 1, 2, 3, 4)))
-    val itA = new TermIterator(Codec.encode(hotA.iterator, avgdl))
-    val itB = new TermIterator(Codec.encode(hotB.iterator, avgdl))
+    val itA = iterOf(hotA, avgdl)
+    val itB = iterOf(hotB, avgdl)
     val phrase = new PhraseScorer(IndexedSeq(itA, itB), 0, 1.0, avgdl)
-    val rareScorer = new TermScorer(new TermIterator(Codec.encode(rare.iterator, avgdl)), 1.0)
+    val rareScorer = new TermScorer(iterOf(rare, avgdl), 1.0)
       .withAvgdl(avgdl)
     assert(phrase.maxScore < 1.2) // the tightened bound (loose bound was 2.2)
     val got = maxscoreTopK(IndexedSeq[DocScorer](rareScorer, phrase), 5)
@@ -174,8 +173,8 @@ class WandSpec extends AnyFunSuite with GenSamples {
       val p = if (d >= 50000L && d < 50512L) 1 else 500
       Decoded(d, 1, 30, Array(p))
     }.toVector
-    val itA = new TermIterator(Codec.encode(aRun.iterator, avgdl))
-    val itB = new TermIterator(Codec.encode(bRun.iterator, avgdl))
+    val itA = iterOf(aRun, avgdl)
+    val itB = iterOf(bRun, avgdl)
     val phrase = new PhraseScorer(IndexedSeq(itA, itB), 0, 1.0, avgdl)
     val got = exhaustiveTopK(phrase, 1000)
     assert(got.map(_._1).sorted === (50000L until 50512L by 2L).toVector)
@@ -195,8 +194,8 @@ class WandSpec extends AnyFunSuite with GenSamples {
     }.toVector
     forAll(Gen.zip(runGen, runGen, Gen.choose(0, 3), Gen.oneOf(2, 10))) { case (ra, rb, slop, k) =>
       val phrase = new PhraseScorer(IndexedSeq(
-        new TermIterator(Codec.encode(ra.iterator, avgdl)),
-        new TermIterator(Codec.encode(rb.iterator, avgdl))), slop, 1.5, avgdl)
+        iterOf(ra, avgdl),
+        iterOf(rb, avgdl)), slop, 1.5, avgdl)
       val got = exhaustiveTopK(phrase, k)
       // brute force straight off the raw runs through the same kernel
       val byA = ra.map(d => d.docId -> d).toMap
@@ -221,8 +220,8 @@ class WandSpec extends AnyFunSuite with GenSamples {
     val hot = (0L until 2000000L by 2L).map(d => Decoded(d, 1, 30, Array(0))).toVector
     val rare = Vector(100001L, 500001L, 900001L, 1300001L, 1700001L)
       .map(d => Decoded(d, 5, 30, Array(0, 1, 2, 3, 4)))
-    val hotIt = new TermIterator(Codec.encode(hot.iterator, avgdl))
-    val rareIt = new TermIterator(Codec.encode(rare.iterator, avgdl))
+    val hotIt = iterOf(hot, avgdl)
+    val rareIt = iterOf(rare, avgdl)
     val scorers = IndexedSeq(
       new TermScorer(hotIt, 0.05).withAvgdl(avgdl),   // low idf
       new TermScorer(rareIt, 12.0).withAvgdl(avgdl))  // high idf
