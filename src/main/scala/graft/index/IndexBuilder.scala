@@ -54,13 +54,6 @@ final case class TextIndex(
   @transient lazy val statsCache: LruCache[(String, String), Option[TermStats]] =
     new LruCache(65536)
 
-  def analyzerFor(field: String): graft.analysis.Analyzer =
-    fields.collectFirst { case FieldDef(`field`, _, TextField(a), _) => a }
-      .getOrElse(graft.analysis.Analyzers.Keyword)
-
-  def isTextField(field: String): Boolean =
-    fields.exists(f => f.indexField == field && f.kind.isInstanceOf[TextField])
-
   /** Pin the index in memory for repeated queries (search service mode),
     * filled in one pass over the documents:
     *  1. `docs` is persisted FIRST, so the tokenize that fills the postings

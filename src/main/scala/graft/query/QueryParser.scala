@@ -11,7 +11,7 @@ import java.time.{LocalDate, LocalDateTime, OffsetDateTime, ZoneOffset}
   * `[a TO b]`/`{a TO b}` ranges, `prefix*`, `wild?card*`, `fuzzy~N`,
   * `boost^N`, and parenthesized groups.
   *
-  * The parser produces raw (un-analyzed) terms; the Searcher binds them to
+  * The parser produces raw (un-analyzed) terms; [[QueryFrontEnd.parse]] binds them to
   * the index (query-time analysis of TEXT fields, stop-word clause drops) —
   * mirroring how the reference parses with the view's analyzer
   * (DatabaseIndexer.java:120-126).

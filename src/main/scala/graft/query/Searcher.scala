@@ -1,14 +1,17 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation}
 import org.apache.spark.sql.functions._
 
-import graft.index.{IndexBuilder, TextIndex}
+import graft.index.{FieldStats, IndexBuilder, LruCache, TermStats, TextIndex}
 
-/** Executes a parsed [[Query]] against a [[TextIndex]] as declarative
+/** Executes a resolved [[Query]] against a [[TextIndex]] as declarative
   * Catalyst plans — the Spark-first replacement for the reference's
   * `IndexSearcher.search(q, skip+limit)` call path
   * (/root/reference/src/main/java/com/github/rnewson/couchdb/lucene/DatabaseIndexer.java:531-535).
+  * Parse, bind, stats and the result envelope are the shared
+  * [[QueryFrontEnd]]'s; this class supplies the (docId, score) plan and the
+  * docs table as the stored frame.
   *
   * Physical mapping (SURVEY.md §2.6/§2.7):
   *  - term query      → postings scan filtered on (field, term); BM25 computed
@@ -21,38 +24,42 @@ import graft.index.{IndexBuilder, TextIndex}
   *  - phrase          → n-way docId equi-join of the terms' postings + a
   *                      higher-order array expression counting consecutive
   *                      positions (positional join)
-  *  - prefix/wildcard/fuzzy/term-range → term-dictionary scan (termStats)
-  *                      driver-collected expansion, constant score 1.0
-  *                      (Lucene's CONSTANT_SCORE multi-term rewrite)
+  *  - prefix/wildcard/fuzzy/term-range → OR of the expanded terms' postings
+  *                      at constant score 1.0 (Lucene's CONSTANT_SCORE
+  *                      multi-term rewrite)
   *  - typed point/range → predicate on the doc-value column, constant score
-  *  - top-k           → orderBy(score desc, docId asc).limit(skip+k) =
-  *                      TakeOrderedAndProject (per-partition heaps, no global
-  *                      sort)
   *
   * BM25 with k1=1.2, b=0.75, per-field stats — Lucene 6.4.1 default
   * similarity (reference pom.xml:158; north rule pins the constants).
   */
-final class Searcher(index: TextIndex, opts: SearchOptions = SearchOptions()) {
+final class Searcher(index: TextIndex, opts: SearchOptions = SearchOptions())
+    extends QueryFrontEnd(index.fields, opts) {
   import IndexBuilder.{B, K1}
 
   private val spark = index.docs.sparkSession
   private def docIdCol = index.docIdCol
 
+  protected def termStats: Dataset[TermStats] = index.termStats
+  protected def statsCache: LruCache[(String, String), Option[TermStats]] = index.statsCache
+  protected def fieldStats: Map[String, FieldStats] = index.fieldStats
+
+  protected def stored(what: String): DataFrame =
+    index.docs.select(col(docIdCol).cast("long").as("docId") +:
+      index.docs.columns.toSeq.filterNot(_ == docIdCol).map(col): _*)
+
+  /** Catalyst plans every match; TakeOrderedAndProject bounds the top k. */
+  protected def matches(r: Resolved, exhaustive: Boolean): DataFrame = execWith(r.query, r)
+
   // ---------------- public API ----------------------------------------
 
-  def parse(q: String): Query = {
-    val raw = new QueryParser(opts.defaultField, opts.defaultOperatorAnd, opts.allowLeadingWildcard).parse(q)
-    bind(raw)
-  }
-
   /** (docId, score) frame for a query string. */
-  def scored(q: String): DataFrame = exec(parse(q))
+  def scored(q: String): DataFrame = matches(resolve(parse(q)), exhaustive = true)
 
   /** Top-k envelope: rank (1-based, after skip), docId, score — ties broken
     * by docId asc (Lucene tie-break). Extra stored fields joined when
     * requested.
     */
-  def search(q: String): DataFrame = searchFrom(parse(q), None)
+  def search(q: String): DataFrame = envelope(q)
 
   /** Top-k envelope AND total_rows from ONE scoring pass — the reference
     * reads `totalHits` off the same collector that gathered the top docs
@@ -66,80 +73,9 @@ final class Searcher(index: TextIndex, opts: SearchOptions = SearchOptions()) {
     *   val total = obs.get("total_rows").asInstanceOf[Long]
     * }}}
     */
-  def searchWithTotal(q: String): (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation()
-    (searchFrom(parse(q), Some(obs)), obs)
-  }
-
-  private def searchFrom(ast: Query, totalObs: Option[org.apache.spark.sql.Observation]): DataFrame = {
-    val hits0 = exec(ast)
-    val hits = totalObs match {
-      case Some(obs) => hits0.observe(obs, count(lit(1)).as("total_rows"))
-      case None => hits0
-    }
-    val k = opts.skip + opts.limit
-    // Field sort joins sort keys from the doc table (aliased sort_i to avoid
-    // collisions); scores still computed, un-normalized (reference
-    // DatabaseIndexer.java:594-608). Default sort: score desc, docId asc
-    // (Lucene tie-break).
-    val sortCols = Searcher.sortColumns(opts.sort)
-    val ext = Searcher.externalSorts(opts.sort)
-    val prepared =
-      if (ext.isEmpty) hits
-      else hits.join(
-        index.docs.select(col(docIdCol).cast("long").as("docId") +:
-          Searcher.sortSideCols(ext): _*),
-        Seq("docId"))
-    // skip/limit pagination (reference DatabaseIndexer.java:515-543):
-    // fetch skip+limit via TakeOrderedAndProject, then window the tiny
-    // (≤ skip+limit row) result locally to drop the first `skip`.
-    val ordered = prepared.orderBy(sortCols: _*).limit(k)
-    val w = org.apache.spark.sql.expressions.Window.orderBy(sortCols: _*)
-    val ranked0 = ordered.withColumn("rank", row_number().over(w)).filter(col("rank") > opts.skip)
-    // per-row sort_order — the reference returns each FieldDoc's sort key
-    // values when the search was field-sorted (DatabaseIndexer.java:597-608)
-    val ranked =
-      if (opts.sort.isEmpty) ranked0
-      else ranked0.withColumn("sort_order", Searcher.sortOrderCol(opts.sort))
-    val withDocs =
-      if (opts.includeDocs || opts.includeFields.nonEmpty) {
-        // include_docs fetch-back = broadcast equi-join of the ≤k hit ids
-        // against the stored table (reference DatabaseIndexer.java:609-633)
-        val cols: Seq[Column] =
-          if (opts.includeFields.nonEmpty) col(docIdCol) +: opts.includeFields.map(col)
-          else index.docs.columns.toSeq.map(col)
-        val docs = index.docs.select(cols: _*).withColumnRenamed(docIdCol, "docId")
-        docs.join(broadcast(ranked), Seq("docId"), "inner")
-      } else ranked
-    if (opts.highlights > 0) addHighlights(withDocs, ast) else withDocs
-  }
-
-  /** ?highlights=n: best fragments of the default text field per hit,
-    * computed over the ≤k result rows (reference DatabaseIndexer.java:512-513).
-    */
-  private def addHighlights(result: DataFrame, ast: Query): DataFrame = {
-    val srcColOpt = index.fields.collectFirst {
-      case graft.index.FieldDef(f, src, _: graft.index.TextField, _) if f == opts.defaultField => src
-    }
-    srcColOpt match {
-      case None => result
-      case Some(srcCol) =>
-        val terms = collectTerms(ast).filter(_._1 == opts.defaultField).map(_._2).distinct
-        val withText =
-          if (result.columns.contains(srcCol)) result
-          else result.join(
-            broadcast(index.docs.select(col(docIdCol).cast("long").as("docId"), col(srcCol))),
-            Seq("docId"))
-        val n = opts.highlights
-        val len = opts.highlightLength
-        val outSchema = withText.schema
-          .add("highlights", org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType))
-        val textIdx = withText.schema.fieldIndex(srcCol)
-        withText.map { row =>
-          val frags = Highlighter.fragments(row.getString(textIdx), terms, n, len)
-          org.apache.spark.sql.Row.fromSeq(row.toSeq :+ frags)
-        }(org.apache.spark.sql.Encoders.row(outSchema))
-    }
+  def searchWithTotal(q: String): (DataFrame, Observation) = {
+    val obs = Observation()
+    (envelope(q, Some(obs)), obs)
   }
 
   /** Total matching docs — reference `total_rows` (DatabaseIndexer.java:638).
@@ -152,58 +88,6 @@ final class Searcher(index: TextIndex, opts: SearchOptions = SearchOptions()) {
     obs.get("total_rows").asInstanceOf[Long]
   }
 
-  /** Multi-query batch: comma-separated q, one result frame with a `qid`
-    * column (reference DatabaseIndexer.java:476,689-691).
-    */
-  def multiSearch(qs: String): DataFrame =
-    {
-      val parts = QueryParser.splitOnCommas(qs)
-      require(parts.nonEmpty, s"multiSearch needs at least one query in '$qs'")
-      parts.zipWithIndex
-        .map { case (q, idx) => search(q).withColumn("qid", lit(idx)) }
-        .reduce(_ unionByName _)
-    }
-
-  /** Per-term docFreq for a query — reference `?rewrite=true` debug
-    * (DatabaseIndexer.java:489-504).
-    */
-  def rewriteDebug(q: String): Map[(String, String), Long] = {
-    val terms = collectTerms(parse(q))
-    lookupStats(terms).map { case (k, v) => k -> v.df }
-  }
-
-  // ---------------- binding (query-time analysis) ----------------------
-
-  /** Analyze TEXT-field terms with the field's analyzer — or the per-query
-    * `?analyzer=` override (reference DatabaseIndexer.java:477); stop words
-    * drop the clause (Lucene parser returns null). STRING fields match
-    * exactly.
-    */
-  private def bind(q: Query): Query = {
-    val analyzerFor: String => graft.analysis.Analyzer = opts.analyzer match {
-      case Some(name) => _ => graft.analysis.Analyzers.byName(name)
-      case None => index.analyzerFor
-    }
-    QueryBind.bind(q, index.isTextField, analyzerFor)
-  }
-
-  // ---------------- statistics -----------------------------------------
-
-  private def collectTerms(q: Query): Seq[(String, String)] = q match {
-    case TermQ(f, t) => Seq((f, t))
-    case PhraseQ(f, ts, _) => ts.map((f, _))
-    case BoolQ(cs) => cs.flatMap(c => collectTerms(c.q))
-    case BoostQ(inner, _) => collectTerms(inner)
-    case _ => Nil
-  }
-
-  /** Memoized driver-side term-stats lookup — the shared
-    * [[graft.index.StatsLookup]] kernel (one definition with the segment
-    * path).
-    */
-  private def lookupStats(terms: Seq[(String, String)]): Map[(String, String), graft.index.TermStats] =
-    graft.index.StatsLookup.lookup(index.statsCache, index.termStats, terms)
-
   // ---------------- execution ------------------------------------------
 
   /** Score expression with stats inlined as literals — stays inside
@@ -213,37 +97,21 @@ final class Searcher(index: TextIndex, opts: SearchOptions = SearchOptions()) {
     lit(idf) * tf * lit(K1 + 1.0) /
       (tf + lit(K1) * (lit(1.0 - B) + lit(B / avgdl) * dl))
 
-  /** Index-time per-field boost from the spec (FieldDef.boost) — folded
-    * into the term weight, exactly 1.0 when unset (IEEE x*1.0 == x).
-    */
-  private def fieldBoost(f: String): Double =
-    index.fields.find(_.indexField == f).map(_.boost).getOrElse(1.0)
-
   private def emptyHits: DataFrame = {
     import spark.implicits._
     spark.emptyDataset[(Long, Double)].toDF("docId", "score")
   }
 
-  private[query] def exec(q: Query): DataFrame = {
-    val stats = lookupStats(collectTerms(q))
-    execWith(q, stats)
-  }
-
-  private def execWith(q: Query, stats: Map[(String, String), graft.index.TermStats]): DataFrame = q match {
+  private def execWith(q: Query, r: Resolved): DataFrame = q match {
     case EmptyQ => emptyHits
 
-    case MatchAllQ =>
-      index.docs.select(col(docIdCol).cast("long").as("docId"), lit(1.0).as("score"))
-
     case TermQ(f, t) =>
-      stats.get((f, t)) match {
+      weight(r, f, t) match {
         case None => emptyHits
-        case Some(st) =>
-          val fs = index.fieldStats(f)
-          val theIdf = IndexBuilder.idf(st.df, fs.docCount) * fieldBoost(f)
+        case Some(w) =>
           index.postings
             .filter(col("field") === f && col("term") === t)
-            .select(col("docId"), bm25Col(theIdf, fs.avgdl, col("tf").cast("double"), col("dl").cast("double")).as("score"))
+            .select(col("docId"), bm25Col(w, fieldStats(f).avgdl, col("tf").cast("double"), col("dl").cast("double")).as("score"))
       }
 
     case PhraseQ(f, terms, slop) =>
@@ -259,16 +127,16 @@ final class Searcher(index: TextIndex, opts: SearchOptions = SearchOptions()) {
       // shuffled. Round 2 joined in phrase order with no hint: two common
       // terms ⇒ a full n-way shuffle (ft_phrase 10.4 s vs 0.27 s on the
       // segment path; VERDICT r2).
-      if (terms.exists(t => !stats.contains((f, t)))) return emptyHits
-      val fs = index.fieldStats(f)
-      val sumIdf = terms.map(t => IndexBuilder.idf(stats((f, t)).df, fs.docCount) * fieldBoost(f)).sum
-      val orderIdx = terms.indices.sortBy(i => stats((f, terms(i))).df)
+      val ws = terms.map(weight(r, f, _))
+      if (ws.exists(_.isEmpty)) return emptyHits
+      val sumIdf = ws.flatten.sum
+      val orderIdx = terms.indices.sortBy(i => r.stats((f, terms(i))).df)
       val frames = orderIdx.zipWithIndex.map { case (termIdx, joinPos) =>
         val base = index.postings.filter(col("field") === f && col("term") === terms(termIdx))
         if (joinPos == 0) base.select(col("docId"), col("positions").as(s"p$termIdx"), col("dl"))
         else base.select(col("docId"), col("positions").as(s"p$termIdx"))
       }
-      val rareDf = stats((f, terms(orderIdx.head))).df
+      val rareDf = r.stats((f, terms(orderIdx.head))).df
       val joined =
         if (rareDf <= Searcher.BroadcastDfMax)
           frames.tail.foldLeft(frames.head)((a, b) => broadcast(a).join(b, Seq("docId")))
@@ -299,7 +167,7 @@ final class Searcher(index: TextIndex, opts: SearchOptions = SearchOptions()) {
         }
       withFreq
         .filter(col("pf") > 0)
-        .select(col("docId"), bm25Col(sumIdf, fs.avgdl, col("pf"), col("dl").cast("double")).as("score"))
+        .select(col("docId"), bm25Col(sumIdf, fieldStats(f).avgdl, col("pf"), col("dl").cast("double")).as("score"))
 
     case BoolQ(clauses) =>
       val pos = clauses.filter(_.occur != Occur.MustNot)
@@ -316,7 +184,7 @@ final class Searcher(index: TextIndex, opts: SearchOptions = SearchOptions()) {
       // a stats-known term (doc-value predicates, expansions) or there are
       // no MUSTs at all (a true disjunction needs the union).
       def mustDf(q: Query): Option[Long] = q match {
-        case TermQ(f, t) => Some(stats.get((f, t)).map(_.df).getOrElse(0L))
+        case TermQ(f, t) => Some(r.stats.get((f, t)).map(_.df).getOrElse(0L))
         case _ => None
       }
       val mustDfs = musts.map(m => mustDf(m._1.q))
@@ -333,14 +201,14 @@ final class Searcher(index: TextIndex, opts: SearchOptions = SearchOptions()) {
           val (known, unknown) = musts.zip(mustDfs).partition(_._2.isDefined)
           val ordered = (known.sortBy(_._2.get) ++ unknown).map(_._1)
           val frames = ordered.map { case (c, i) =>
-            execWith(c.q, stats).select(col("docId"), col("score").as(s"s_$i"))
+            execWith(c.q, r).select(col("docId"), col("score").as(s"s_$i"))
           }
           val conj =
             if (mustDfs.flatten.min <= Searcher.BroadcastDfMax)
               frames.tail.foldLeft(frames.head)((a, b) => broadcast(a).join(b, Seq("docId")))
             else frames.reduce((a, b) => a.join(b, Seq("docId")))
           val withShoulds = shoulds.foldLeft(conj) { case (acc, (c, i)) =>
-            acc.join(execWith(c.q, stats).select(col("docId"), col("score").as(s"s_$i")),
+            acc.join(execWith(c.q, r).select(col("docId"), col("score").as(s"s_$i")),
               Seq("docId"), "left")
           }
           // sum in clause order (float-determinism invariant of BoolScorer)
@@ -349,7 +217,7 @@ final class Searcher(index: TextIndex, opts: SearchOptions = SearchOptions()) {
         } else {
           val numMust = musts.size
           val frames = pos.zipWithIndex.map { case (c, idx) =>
-            execWith(c.q, stats).select(
+            execWith(c.q, r).select(
               col("docId"), col("score"),
               lit(if (c.occur == Occur.Must) 1 else 0).as("isMust"),
               lit(idx).as("cid"))
@@ -362,121 +230,44 @@ final class Searcher(index: TextIndex, opts: SearchOptions = SearchOptions()) {
         }
       if (neg.isEmpty) positive
       else {
-        val negUnion = neg.map(c => execWith(c.q, stats).select(col("docId"))).reduce(_ union _)
+        val negUnion = neg.map(c => execWith(c.q, r).select(col("docId"))).reduce(_ union _)
         positive.join(negUnion, Seq("docId"), "left_anti")
       }
 
     case BoostQ(inner, boost) =>
-      execWith(inner, stats).withColumn("score", col("score") * lit(boost))
+      execWith(inner, r).withColumn("score", col("score") * lit(boost))
 
-    case mq @ PrefixQ(f, _) => constantScore(f, TermExpansion.predFor(mq))
+    case mq @ (_: PrefixQ | _: WildcardQ | _: FuzzyQ | _: TermRangeQ) =>
+      val (f, expanded) = r.expansions(mq)
+      constantScore(f, expanded)
 
-    case mq @ WildcardQ(f, _) => constantScore(f, TermExpansion.predFor(mq))
-
-    case mq @ FuzzyQ(f, _, _) => constantScore(f, TermExpansion.predFor(mq))
-
-    case mq @ TermRangeQ(f, _, _, _, _) => constantScore(f, TermExpansion.predFor(mq))
-
-    case dv @ (_: NumRangeQ | _: NumTermQ) =>
+    case dv @ (MatchAllQ | _: NumRangeQ | _: NumTermQ) =>
       index.docs.filter(Searcher.docValuePred(dv))
         .select(col(docIdCol).cast("long").as("docId"), lit(1.0).as("score"))
   }
 
-  /** Multi-term queries: term-dictionary scan → OR of postings at constant
-    * score 1.0 (Lucene CONSTANT_SCORE rewrite). The expansion predicate is
-    * pushed into the distributed termStats scan and capped at
-    * MaxClauseCount (TermExpansion), then pushed back as an isin filter so
-    * the postings scan stays a single pruned pass.
+  /** Multi-term queries: OR of the expanded terms' postings at constant
+    * score 1.0 (Lucene CONSTANT_SCORE rewrite). The front end's capped
+    * expansion is pushed back as an isin filter so the postings scan stays
+    * a single pruned pass.
     */
-  private def constantScore(f: String, termPred: Column): DataFrame = {
-    val expanded = TermExpansion.expand(index.termStats.toDF(), f, termPred)
+  private def constantScore(f: String, expanded: Seq[String]): DataFrame =
     if (expanded.isEmpty) emptyHits
     else index.postings
       .filter(col("field") === f && col("term").isin(expanded.toIndexedSeq: _*))
       .select(col("docId")).distinct()
       .withColumn("score", lit(1.0))
-  }
 }
 
 object Searcher {
   /** Typed doc-value column: dates compare as epoch millis
     * (reference FieldType.java:32-53). Shared by the DataFrame path
-    * (over the docs table) and the segment path (over the stored sidecar).
+    * (over the docs table), the segment path (over the stored sidecar) and
+    * the envelope's typed sort keys.
     */
   def numCol(f: String, tpe: String): Column =
     if (tpe == "date") unix_millis(col(f).cast("timestamp")).cast("double")
     else col(f).cast("double")
-
-  /** Ordering column for a `?sort=/field<type>` key: the typed cast when a
-    * type is given (reference builds a typed SortField,
-    * CustomQueryParser.java:60-63, TypedField.toSortField), the column's
-    * native order otherwise — a string-encoded numeric column sorted
-    * without the cast would silently order lexicographically.
-    */
-  def sortKeyCol(f: String, tpe: Option[String]): Column = tpe match {
-    case None => col(f)
-    case Some(t) => numCol(f, t)
-  }
-
-  /** Per-row `sort_order` rendering of a sort key (reference emits each
-    * FieldDoc's field values, DatabaseIndexer.java:597-608). JSON arrays
-    * are untyped, so the envelope carries the values as strings; integral
-    * types render without a fraction (engine-stable long→string cast).
-    */
-  def sortDisplayCol(f: String, tpe: Option[String]): Column = tpe match {
-    case None => col(f).cast("string")
-    case Some("int") | Some("long") => col(f).cast("long").cast("string")
-    case Some("float") | Some("double") => col(f).cast("double").cast("string")
-    case Some("date") => unix_millis(col(f).cast("timestamp")).cast("string")
-    case Some(other) => throw new IllegalArgumentException(s"unknown sort type <$other>")
-  }
-
-  /** The requested sort's external (non-`_score`/`_doc`) fields with their
-    * positional index — these need sort keys joined from the doc table /
-    * stored sidecar. Shared by both executors.
-    */
-  def externalSorts(sort: Seq[SortField]): Seq[(String, Option[String], Int)] =
-    sort.zipWithIndex.collect {
-      case (SortField(f, tpe, _), i) if f != "_score" && f != "_doc" => (f, tpe, i)
-    }
-
-  /** Join-side columns carrying each external sort's typed ordering key
-    * (`sort_i`) and its envelope rendering (`sortv_i`).
-    */
-  def sortSideCols(ext: Seq[(String, Option[String], Int)]): Seq[Column] =
-    ext.flatMap { case (f, tpe, i) => Seq(
-      sortKeyCol(f, tpe).as(s"sort_$i"),
-      sortDisplayCol(f, tpe).as(s"sortv_$i")) }
-
-  /** Ordering columns for the requested sort, docId tie-break appended
-    * (Lucene's doc tie-break); default is relevance (score desc). ONE
-    * definition for both executors — the ranking contract must be
-    * identical on the DataFrame and segment paths (shared oracles).
-    */
-  def sortColumns(sort: Seq[SortField]): Seq[Column] =
-    if (sort.isEmpty) Seq(col("score").desc, col("docId").asc)
-    else sort.zipWithIndex.map { case (SortField(f, _, asc), i) =>
-      val c = f match {
-        case "_score" => col("score")
-        case "_doc" => col("docId")
-        case _ => col(s"sort_$i")
-      }
-      if (asc) c.asc else c.desc
-    } :+ col("docId").asc
-
-  /** Per-row `sort_order` array — the reference returns each FieldDoc's
-    * sort key values when the search was field-sorted
-    * (DatabaseIndexer.java:597-608). Rendering must match the shared
-    * oracles on both paths.
-    */
-  def sortOrderCol(sort: Seq[SortField]): Column =
-    array(sort.zipWithIndex.map { case (SortField(f, _, _), i) =>
-      f match {
-        case "_score" => col("score").cast("string")
-        case "_doc" => col("docId").cast("string")
-        case _ => col(s"sortv_$i")
-      }
-    }: _*)
 
   /** Predicate Column for a typed point/range query over doc values. */
   def docValuePred(q: Query): Column = q match {

@@ -25,18 +25,19 @@ object TermExpansion {
     terms
   }
 
-  /** The term predicate of a multi-term query node — one definition so the
-    * DataFrame and segment paths can't diverge.
+  /** Field and term predicate of a multi-term query node, None for any
+    * other node — one definition so the DataFrame and segment paths can't
+    * diverge.
     */
-  def predFor(q: Query): Column = q match {
-    case PrefixQ(_, p) => col("term").startsWith(p)
-    case WildcardQ(_, pat) => col("term").rlike(QueryBind.wildcardRegex(pat))
-    case FuzzyQ(_, t, maxEdits) => levenshtein(col("term"), lit(t)) <= maxEdits
-    case TermRangeQ(_, lo, hi, incLo, incHi) =>
+  def unapply(q: Query): Option[(String, Column)] = q match {
+    case PrefixQ(f, p) => Some((f, col("term").startsWith(p)))
+    case WildcardQ(f, pat) => Some((f, col("term").rlike(QueryBind.wildcardRegex(pat))))
+    case FuzzyQ(f, t, maxEdits) => Some((f, levenshtein(col("term"), lit(t)) <= maxEdits))
+    case TermRangeQ(f, lo, hi, incLo, incHi) =>
       val conds = Seq(
         lo.map(v => if (incLo) col("term") >= v else col("term") > v),
         hi.map(v => if (incHi) col("term") <= v else col("term") < v)).flatten
-      conds.reduceOption(_ && _).getOrElse(lit(true))
-    case other => throw new IllegalArgumentException(s"not a multi-term query: $other")
+      Some((f, conds.reduceOption(_ && _).getOrElse(lit(true))))
+    case _ => None
   }
 }

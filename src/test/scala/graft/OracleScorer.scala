@@ -61,7 +61,7 @@ final class OracleScorer(docs: Seq[(Long, Map[String, String])], fields: Seq[Fie
 
   private def isText(f: String): Boolean = kinds.get(f).exists(_.isInstanceOf[TextField])
 
-  /** Same query-time binding as Searcher.bind. */
+  /** Same query-time binding as QueryFrontEnd.parse (QueryBind.bind). */
   def bind(q: Query): Query = q match {
     case TermQ(f, t) if isText(f) =>
       analyzerFor(f).queryTerms(t) match {

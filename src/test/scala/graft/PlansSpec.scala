@@ -39,6 +39,19 @@ class PlansSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
   }
 
+  test("highlight fetch-back broadcasts the ranked rows, not the docs table") {
+    val s = new Searcher(Engine.documentsIndex(spark, sfDir), SearchOptions(limit = 5, highlights = 2))
+    val df = s.search("dup")
+    assert(df.collect().nonEmpty)
+    val exchanges = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => b
+      }
+    assert(exchanges.nonEmpty, planOf(df).take(3000))
+    // the docs side is the one carrying the text column
+    assert(!exchanges.exists(_.output.exists(_.name == "text")), planOf(df).take(3000))
+  }
+
   test("phrase plan: rarest-first broadcast hash joins, no posting shuffle (VERDICT r2 #2)") {
     val s = new Searcher(Engine.documentsIndex(spark, sfDir), SearchOptions(limit = 10))
     val plan = planOf(s.scored("\"merge batch\""))

@@ -116,7 +116,7 @@ class SegmentSpec extends SparkSpec {
         assert(math.abs(a - b) <= 1e-9 * math.max(1.0, math.abs(b)), s"score differs for q=$q")
       }
     }
-    // field sort + include_fields envelope parity with Searcher.searchFrom
+    // field sort + include_fields: one envelope over both executors
     val sortOpts = SearchOptions(limit = 8,
       sort = graft.query.QueryParser.parseSort("/role"), includeFields = Seq("text"))
     val gotEnv = new SegmentSearcher(seg, sortOpts).searchEnvelope("hello")
@@ -130,6 +130,21 @@ class SegmentSpec extends SparkSpec {
     assert(gotEnv.map(t => (t._1, t._3, t._4, t._5)) === wantEnv.map(t => (t._1, t._3, t._4, t._5)))
     gotEnv.zip(wantEnv).foreach { case (a, b) =>
       assert(math.abs(a._2 - b._2) <= 1e-9 * math.max(1.0, math.abs(b._2)))
+    }
+    // highlights — a multi-term query's by its expanded terms — and skip > 0
+    // through the one envelope on both executors
+    def highlighted(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("docId"), col("rank"), col("highlights")).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getSeq[String](2))).toSeq.sortBy(_._2)
+    Seq(
+      "hello" -> SearchOptions(limit = 5, highlights = 2),
+      "hel*" -> SearchOptions(limit = 5, highlights = 2),
+      "hello" -> SearchOptions(limit = 4, skip = 3, highlights = 2)).foreach { case (q, o) =>
+      val gotHl = highlighted(new SegmentSearcher(seg, o).searchEnvelope(q))
+      val wantHl = highlighted(new Searcher(dfIndex, o).search(q))
+      assert(gotHl.map(_._2) === (o.skip + 1 to o.skip + o.limit), s"q=$q $o")
+      assert(gotHl.forall(_._3.exists(_.contains("<em>"))), s"q=$q $o: $gotHl")
+      assert(gotHl === wantHl, s"q=$q $o")
     }
     // doc-value-only query (no posting clause): served from the sidecar
     val dvOnly = new SegmentSearcher(seg, SearchOptions(limit = 5)).topK("turn_idx<long>:0")
